@@ -100,17 +100,22 @@ def build_bloom_index(
 
     from web_analytics_on_aws_spark.sources.snapshots import (
         _read_manifest,
+        _scan_files,
         current_version,
     )
 
     cur = current_version(table)
     if cur is None:
         raise FileNotFoundError(f"no snapshots at {table}")
-    files = _read_manifest(table, cur)["files"]
+    m = _read_manifest(table, cur)
+    files = m["files"]
+    # the physical file union (the names the bloom probe sees), typed from
+    # the manifest stats — one schema for every indexed column
+    src = _scan_files(spark, files, None, m)
+    dtypes = dict(src.dtypes)
     out: dict[str, int] = {}
     for col in cols:
-        src = spark.read.option("mergeSchema", "true").parquet(*files)
-        dtype = dict(src.dtypes).get(col)
+        dtype = dtypes.get(col)
         if dtype not in _SUPPORTED_TYPES:
             raise TypeError(
                 f"bloom index on {col!r}: type {dtype!r} unsupported — only "

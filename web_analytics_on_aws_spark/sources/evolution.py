@@ -102,7 +102,9 @@ def _derive_schema(spark: SparkSession, m: dict) -> dict:
     identity mapping from the head's unified file schema — every existing
     column keeps its name as its physical name, so all existing files
     remain readable unchanged."""
-    df = spark.read.option("mergeSchema", "true").parquet(*m["files"])
+    from web_analytics_on_aws_spark.sources.snapshots import _scan_files
+
+    df = _scan_files(spark, m["files"], None, m)
     fields = [
         {"id": i + 1, "name": n, "phys": n, "type": t}
         for i, (n, t) in enumerate(df.dtypes)

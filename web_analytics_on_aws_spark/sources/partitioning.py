@@ -511,6 +511,7 @@ def set_partition_spec(
         _manifest_eq_deletes,
         _publish,
         _read_manifest_head,
+        _scan_files,
         current_version,
     )
 
@@ -534,11 +535,7 @@ def set_partition_spec(
     if sch is not None:
         types = {f["phys"]: f["type"] for f in sch["fields"]}
     elif m.get("files"):
-        types = dict(
-            spark.read.option("mergeSchema", "true")
-            .parquet(*m["files"])
-            .dtypes
-        )
+        types = dict(_scan_files(spark, m["files"], None, m).dtypes)
     fields = []
     for source, transform in spec:
         _parse(transform)  # validate early
@@ -1154,9 +1151,10 @@ def partition_value_census(
         from web_analytics_on_aws_spark.sources.snapshots import _scan_files
         # _scan_files, not a raw mergeSchema read: a type-widened mapped
         # table stores mixed physical widths that mergeSchema refuses to
-        # union (int vs long) but the explicit-schema scan up-casts
+        # union (int vs long) but the explicit-schema scan up-casts, and
+        # an unmapped table's schema comes from the manifest stats
         scanned = (
-            _scan_files(spark, fallback, m.get("schema"))
+            _scan_files(spark, fallback, m.get("schema"), m)
             .groupBy(transform_expr(fld).cast("string").alias("__v"))
             .agg(F.count("*").alias("__n"))
             .collect()

@@ -570,10 +570,7 @@ def commit_append_wap(df: DataFrame, table: str, wap_id: str) -> str:
         raise ValueError(f"wap id {wap_id!r} already staged on {table}")
     # column-mapped tables store physical names (sources/evolution.py) —
     # translate the staged payload exactly like commit_append
-    from web_analytics_on_aws_spark.sources.snapshots import (
-        _logical,
-        _read_manifest,
-    )
+    from web_analytics_on_aws_spark.sources.snapshots import _read_manifest
 
     m_head = _read_manifest(table, current_version(table))
     sch = m_head.get("schema")
@@ -610,14 +607,17 @@ def commit_append_wap(df: DataFrame, table: str, wap_id: str) -> str:
     # the publish: validate the WRITTEN BYTES so a staged append can never
     # carry constraint-violating rows toward publish_wap. The validated
     # set rides the stage manifest so publish can detect drift.
+    from web_analytics_on_aws_spark.sources.snapshots import (
+        _read_written,
+        collect_file_stats,
+    )
+
+    new_stats = collect_file_stats(new_files, df.sparkSession)
     cons = table_constraints(table)
     if cons:
         check_constraints(
-            _logical(df.sparkSession.read.parquet(*new_files), sch), cons
+            _read_written(df.sparkSession, new_files, new_stats, sch), cons
         )
-    from web_analytics_on_aws_spark.sources.snapshots import (
-        collect_file_stats,
-    )
 
     body = {
         "wap_id": wap_id,
@@ -627,7 +627,7 @@ def commit_append_wap(df: DataFrame, table: str, wap_id: str) -> str:
         "validated_constraints": cons,
         # manifest column stats + partition tuples collected at STAGE time
         # (the files are final); publish just adopts them
-        "file_stats": collect_file_stats(new_files, df.sparkSession),
+        "file_stats": new_stats,
         "file_partitions": fparts,
     }
     tmp = _wap_path(table, wap_id) + f".tmp-{uuid.uuid4().hex}"
@@ -668,7 +668,7 @@ def read_wap(spark: SparkSession, table: str, wap_id: str) -> DataFrame:
     w = _read_wap_manifest(table, wap_id)
     head = read_snapshot(spark, table)
     sch = _read_manifest(table, current_version(table)).get("schema")
-    staged = _logical(_scan_files(spark, w["new_files"], sch), sch)
+    staged = _logical(_scan_files(spark, w["new_files"], sch, w), sch)
     return head.unionByName(staged, allowMissingColumns=True)
 
 
@@ -698,11 +698,13 @@ def publish_wap(
                     "was staged; pass spark= to re-validate the staged "
                     "files before publish"
                 )
-            from web_analytics_on_aws_spark.sources.snapshots import _logical
+            from web_analytics_on_aws_spark.sources.snapshots import (
+                _read_written,
+            )
 
             check_constraints(
-                _logical(
-                    spark.read.parquet(*w["new_files"]),
+                _read_written(
+                    spark, w["new_files"], w.get("file_stats") or {},
                     prev_m.get("schema"),
                 ),
                 head_cons,

@@ -21,7 +21,7 @@ Scan planning is Iceberg-shaped, in miniature:
   never a correctness dependency;
 - one `InputPartition` per surviving file; `read` streams Arrow record
   batches (zero row-by-row Python), padding net-new columns with nulls so
-  additive schema evolution reads like `read_snapshot(mergeSchema=True)`.
+  additive schema evolution reads like `read_snapshot`'s union schema.
 
 Sharp edge (Spark-level, pinned in tests/test_manifest_groups.py::
 test_snapshot_datasource_reuse_sharp_edge): the Python DataSource layer
@@ -58,6 +58,7 @@ from pyspark.sql.datasource import (
 )
 
 from web_analytics_on_aws_spark.sources.snapshots import (
+    _fold_types,
     _hydrate_manifest,
     _read_manifest,
     _read_manifest_head,
@@ -164,33 +165,12 @@ def _unified_arrow_schema(files: list[str], m: dict | None = None):
     # O(files) pq.read_schema walk at every reader construction. Any
     # disagreement (mixed physical types, legacy files) falls back to the
     # authoritative file walk.
-    if m is not None and files:
+    if m is not None:
         fs = m.get("file_stats", {})
-        order: list[str] = []
-        types: dict[str, str] = {}
-        ok = True
-        for f in files:
-            t = (fs.get(f) or {}).get("types")
-            if not t:
-                ok = False
-                break
-            for name, ddl in t.items():
-                if name not in types:
-                    types[name] = ddl
-                    order.append(name)
-                elif types[name] != ddl:
-                    ok = False
-                    break
-            if not ok:
-                break
-        if ok:
+        types = _fold_types((fs.get(f) or {}).get("types") for f in files)
+        if types is not None:
             try:
-                return pa.schema(
-                    [
-                        pa.field(n, _arrow_type(types[n]), nullable=True)
-                        for n in order
-                    ]
-                )
+                return _arrow_schema_of(types)
             except ValueError:
                 pass  # unconvertible recorded type — fall through
     unified = pa.unify_schemas(
@@ -210,31 +190,29 @@ def _segments_arrow_schema(head: dict):
     the caller falls back to hydration + the authoritative file walk
     (VERDICT r8 #2: that fallback used to be the DEFAULT, an O(files)
     hydration on every plan of a never-mapped 1M-file table)."""
-    import pyarrow as pa
-
-    order: list[str] = []
-    types: dict[str, str] = {}
     # grouped heads: each group summary carries its members' merged types
     # (snapshots._summarize_group), so the union stays O(head) — a group
     # without a types block (member disagreement) fails over to hydration
-    for s in head.get("groups", []) + head.get("segments", []):
-        t = s.get("types")
-        if not t:
-            return None
-        for name, ddl in t.items():
-            if name not in types:
-                types[name] = ddl
-                order.append(name)
-            elif types[name] != ddl:
-                return None
-    if not order:
+    types = _fold_types(
+        s.get("types")
+        for s in head.get("groups", []) + head.get("segments", [])
+    )
+    if types is None:
         return None
     try:
-        return pa.schema(
-            [pa.field(n, _arrow_type(types[n]), nullable=True) for n in order]
-        )
+        return _arrow_schema_of(types)
     except ValueError:
         return None
+
+
+def _arrow_schema_of(types: dict[str, str]):
+    """The arrow rendering of a ``_fold_types`` union (every field
+    nullable: evolution means any column may be absent in older files)."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [pa.field(n, _arrow_type(ddl), nullable=True) for n, ddl in types.items()]
+    )
 
 
 def _mapped_arrow_schema(m: dict):
@@ -248,13 +226,10 @@ def _mapped_arrow_schema(m: dict):
     sch = m.get("schema")
     if sch is None:
         return _unified_arrow_schema(m["files"], m), {}
-    import pyarrow as pa
-
-    fields, mapping = [], {}
-    for f in sch["fields"]:
-        mapping[f["name"]] = f["phys"]
-        fields.append(pa.field(f["name"], _arrow_type(f["type"]), nullable=True))
-    return pa.schema(fields), mapping
+    return (
+        _arrow_schema_of({f["name"]: f["type"] for f in sch["fields"]}),
+        {f["name"]: f["phys"] for f in sch["fields"]},
+    )
 
 
 def _split_top(s: str) -> list[str]:

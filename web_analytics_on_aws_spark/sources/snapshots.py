@@ -738,20 +738,9 @@ def _summarize_segment(rel: str, entries: dict[str, dict]) -> dict:
     # to hydrate O(files) on every plan of a never-mapped table). Any
     # disagreement (mixed physical types across members) drops the block;
     # readers fall back to the authoritative hydrated walk.
-    types: dict[str, str] | None = {}
-    for e in entries.values():
-        t = (e.get("stats") or {}).get("types")
-        if not t:
-            types = None
-            break
-        for cname, ddl in t.items():
-            if cname not in types:
-                types[cname] = ddl
-            elif types[cname] != ddl:
-                types = None
-                break
-        if types is None:
-            break
+    types = _fold_types(
+        (e.get("stats") or {}).get("types") for e in entries.values()
+    )
     if types:
         out["types"] = types
     tuples = [e.get("part") for e in entries.values()]
@@ -878,18 +867,7 @@ def _summarize_group(rel: str, segs: list[dict]) -> dict:
                 del cols[c]
     if cols:
         out["cols"] = cols
-    types: dict[str, str] | None = {}
-    for s in segs:
-        t = s.get("types")
-        if not t:
-            types = None
-            break
-        for cname, ddl in t.items():
-            if types.setdefault(cname, ddl) != ddl:
-                types = None
-                break
-        if types is None:
-            break
+    types = _fold_types(s.get("types") for s in segs)
     if types:
         out["types"] = types
     spec_ids = {s.get("part_spec") for s in segs}
@@ -1455,25 +1433,54 @@ def _file_types(path: str) -> dict[str, str] | None:
         return None
 
 
-def _scan_files(spark: SparkSession, files: list[str], sch: dict | None):
-    """Scan data files under the manifest's column-mapping schema.
+def _fold_types(type_maps) -> dict[str, str] | None:
+    """THE union-of-schemas fold over ``{column: simpleString}`` maps
+    (per-file ``types`` stats, segment or group summaries): columns in
+    first-seen order — the order a mergeSchema read produces over the same
+    files — each at its one agreed type. None when any map is missing or
+    two disagree on a column's type; the caller then falls back to reading
+    the footers. Rendered as a ``StructType`` by ``_scan_files`` and as an
+    arrow schema by the snapshot DataSource."""
+    out: dict[str, str] = {}
+    for t in type_maps:
+        if not t:
+            return None
+        for name, ddl in t.items():
+            if out.setdefault(name, ddl) != ddl:
+                return None
+    return out or None
 
-    Mapped tables read with an EXPLICIT physical schema instead of
-    mergeSchema: files missing an added column null-fill it, dropped
-    physical columns are not decoded, and — the point of evolve_widen_
-    column — files written before a type widening are up-cast inside the
-    vectorized parquet reader (int→long, float→double, decimal precision
-    growth are the reader's supported promotions; a mergeSchema union
-    refuses to merge int with long at all). Unmapped tables keep the
-    union-of-schemas read (additive evolution via mergeSchema)."""
-    if sch is None:
-        return spark.read.option("mergeSchema", "true").parquet(*files)
+
+def _scan_files(
+    spark: SparkSession, files: list[str], sch: dict | None, m: dict
+):
+    """Scan data files under an EXPLICIT schema taken from the manifest,
+    so building the DataFrame runs no schema-inference job.
+
+    Mapped tables read the column-mapping schema's physical fields: files
+    missing an added column null-fill it, dropped physical columns are not
+    decoded, and — the point of evolve_widen_column — files written before
+    a type widening are up-cast inside the vectorized parquet reader
+    (int→long, float→double, decimal precision growth are the reader's
+    supported promotions; a mergeSchema union refuses to merge int with
+    long at all). Unmapped tables read the union of the per-file ``types``
+    that ``m``'s file stats recorded at commit (``_fold_types``) — the
+    schema a mergeSchema read would infer, without opening a footer. Only
+    when a file has no recorded types, or two files disagree on a column's
+    type, does the read fall back to mergeSchema inference."""
+    if sch is not None:
+        types = {f["phys"]: f["type"] for f in sch["fields"]}
+    else:
+        fs = m.get("file_stats", {})
+        types = _fold_types((fs.get(f) or {}).get("types") for f in files)
+        if types is None:
+            return spark.read.option("mergeSchema", "true").parquet(*files)
     from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
     struct = StructType(
         [
-            StructField(f["phys"], _parse_datatype_string(f["type"]), True)
-            for f in sch["fields"]
+            StructField(name, _parse_datatype_string(ddl), True)
+            for name, ddl in types.items()
         ]
     )
     return spark.read.schema(struct).parquet(*files)
@@ -1562,6 +1569,14 @@ def _write_data_files(df: DataFrame, table: str) -> list[str]:
     ]
 
 
+def _read_written(
+    spark: SparkSession, files: list[str], stats: dict, sch: dict | None
+) -> DataFrame:
+    """Just-written data files under LOGICAL names (CHECK constraints are
+    expressed on them), typed from the stats collected for the commit."""
+    return _logical(_scan_files(spark, files, None, {"file_stats": stats}), sch)
+
+
 def last_committed_batch(table: str, app: str) -> int | None:
     """Highest micro-batch id committed by ``app`` (Delta's txn-appId
     idempotence protocol). The head manifest carries the complete per-app
@@ -1625,20 +1640,18 @@ def commit_append(
     # were never the ones validated). On violation the files stay
     # unreferenced — the same GC story lost CAS races rely on.
     validated: dict[str, str] | None = None
+    new_stats = collect_file_stats(new_files, df.sparkSession)
 
     def _validate(cons: dict[str, str]) -> None:
         nonlocal validated
         if cons and cons != validated:
-            # constraints are expressed on LOGICAL names — view the
-            # written (physical) bytes through the mapping first
             check_constraints(
-                _logical(df.sparkSession.read.parquet(*new_files), sch),
+                _read_written(df.sparkSession, new_files, new_stats, sch),
                 cons,
             )
         validated = cons
 
     _validate(table_constraints(table))
-    new_stats = collect_file_stats(new_files, df.sparkSession)
     # An append's payload is position-independent, so a CAS loss is resolved
     # by re-reading the new head and re-publishing on top of it (data files
     # are already durable — only the manifest pointer moves).
@@ -1717,19 +1730,31 @@ def commit_overwrite(
         )
     else:
         new_files = _write_data_files(_sorted_for_write(df, m_prev), table)
+    new_stats = collect_file_stats(new_files, df.sparkSession)
     cons = table_constraints(table)
     if cons:
         # validate the written bytes (see commit_append)
         check_constraints(
-            _logical(df.sparkSession.read.parquet(*new_files), sch), cons
+            _read_written(df.sparkSession, new_files, new_stats, sch), cons
         )
     version = (current_version(table) or 0) + 1
     _publish(
         table, version, new_files, "overwrite", txn=txn,
         file_partitions=fparts,
-        file_stats=collect_file_stats(new_files, df.sparkSession),
+        file_stats=new_stats,
     )
     return version
+
+
+# every position-delete sidecar holds (``_metadata.file_path``,
+# ``_metadata.row_index``) pairs — a fixed schema, so reading sidecars
+# never needs an inference job
+_POS_DELETE_SCHEMA = "file string, pos long"
+
+
+def _read_position_deletes(spark: SparkSession, files: list[str]) -> DataFrame:
+    """Position-delete sidecars as one ``(file, pos)`` scan."""
+    return spark.read.schema(_POS_DELETE_SCHEMA).parquet(*files)
 
 
 def _apply_position_deletes(
@@ -1752,7 +1777,7 @@ def _apply_position_deletes(
         return df
     cols = df.columns
     dv = (
-        spark.read.parquet(*delete_files)
+        _read_position_deletes(spark, delete_files)
         .select(F.col("file").alias("__dv_f"), F.col("pos").alias("__dv_p"))
         .distinct()
     )
@@ -1782,7 +1807,11 @@ def _apply_equality_deletes(
     data file has sequence < s — so an upsert's own appended rows (same
     commit, same sequence) survive while every older occurrence of the key
     dies. Per-row file sequence comes from a broadcast (path → seq) map
-    join; sidecars are read once each with their sequence attached.
+    join. All sidecars of one key set are ONE scan, typed with the key
+    fields of ``df``'s own schema (``_check_key_types`` pins the sidecars
+    to those types at commit), each row's sequence looked up from its
+    ``_metadata.file_path`` in a literal (path → seq) map — building the
+    plan runs no Spark job however many sidecars are outstanding.
 
     Scale note: this is the FULL-SCAN (JVM) path — every caller passes a
     hydrated manifest because its scan reads every live file anyway, so
@@ -1792,6 +1821,7 @@ def _apply_equality_deletes(
     seqs threaded from the predicate-surviving segment entries — a
     selective MOR read never materializes a manifest-wide map."""
     import pyspark.sql.functions as F
+    from pyspark.sql.types import StructField, StructType
 
     entries = _manifest_eq_deletes(m)
     if not entries:
@@ -1810,27 +1840,48 @@ def _apply_equality_deletes(
         if file_uri_col is None
         else F.col(file_uri_col)
     )
-    out = df.withColumn(
-        "__path", F.url_decode(F.regexp_replace(uri, _STRIP_SCHEME, ""))
-    ).join(F.broadcast(seq_df), "__path", "left")
+    out = df.withColumn("__path", _uri_to_path(uri)).join(
+        F.broadcast(seq_df), "__path", "left"
+    )
     by_keys: dict[tuple, list[dict]] = {}
     for e in entries:
         by_keys.setdefault(tuple(e["keys"]), []).append(e)
     for keys, group in by_keys.items():
-        dele = None
-        for e in group:
-            part = (
-                spark.read.parquet(e["path"])
-                .select(*keys)
-                .withColumn("__dseq", F.lit(int(e["seq"])))
-            )
-            dele = part if dele is None else dele.unionByName(part)
+        key_schema = StructType(
+            [StructField(k, df.schema[k].dataType, True) for k in keys]
+        )
+        seq_of = F.create_map(
+            *[F.lit(x) for e in group for x in (e["path"], int(e["seq"]))]
+        )
+        # sidecars live beside the data files, so the round-trip the commit
+        # verified covers them; a miss would silently disable the delete
+        sidecar = _uri_to_path(F.col("_metadata.file_path"))
+        dele = spark.read.schema(key_schema).parquet(
+            *[e["path"] for e in group]
+        ).withColumn(
+            "__dseq",
+            F.coalesce(
+                seq_of[sidecar],
+                F.raise_error(
+                    F.concat(F.lit("equality-delete sidecar not in manifest: "),
+                             sidecar)
+                ),
+            ),
+        )
         cond = _and_all(
             [out[k].eqNullSafe(dele[k]) for k in keys]
             + [dele["__dseq"] > out["__fseq"]]
         )
         out = out.join(F.broadcast(dele), on=cond, how="left_anti")
     return out.select(*cols)
+
+
+def _uri_to_path(uri):
+    """``_metadata.file_path`` URI → manifest path (scheme strip +
+    percent-decode), as a column expression."""
+    import pyspark.sql.functions as F
+
+    return F.url_decode(F.regexp_replace(uri, _STRIP_SCHEME, ""))
 
 
 def _and_all(conds):
@@ -1876,7 +1927,10 @@ def read_snapshot(
     ``TIMESTAMP AS OF`` resolution via each manifest's commit stamp.
     Outstanding merge-on-read position deletes (``delete_where_mor``) and
     equality deletes (``delete_keys_mor`` / ``upsert_keys_mor``) are
-    applied as anti joins."""
+    applied as anti joins. Every scan in the plan — data files, position
+    sidecars, one scan per equality key set — reads under a schema the
+    manifest already holds, so building the DataFrame runs no Spark job
+    (see ``_scan_files``)."""
     if version is not None and as_of_timestamp is not None:
         raise ValueError("pass version OR as_of_timestamp, not both")
     cur = current_version(table)
@@ -1890,12 +1944,12 @@ def read_snapshot(
     # column mapping (sources/evolution.py): data files store PHYSICAL
     # names; the projection to THIS version's logical schema is the last
     # step, so every version time-travels under its own column names.
-    # Unmapped tables read mergeSchema (additive union); mapped tables
-    # read under the explicit physical schema (_scan_files) — which also
-    # renders each version's WIDENED types (evolve_widen_column) without
-    # touching old files.
+    # Unmapped tables read the additive union of the files' recorded
+    # types; mapped tables read under the explicit physical schema
+    # (_scan_files) — which also renders each version's WIDENED types
+    # (evolve_widen_column) without touching old files.
     sch = m.get("schema")
-    df = _scan_files(spark, files, sch)
+    df = _scan_files(spark, files, sch, m)
     dvs, eqs = _manifest_deletes(m), _manifest_eq_deletes(m)
     if not dvs and not eqs:
         return _logical(df, sch)
@@ -2405,7 +2459,7 @@ def _rewrite_matched(
     # physical (evolution.py)
     sch = m.get("schema")
     df = _logical(
-        _scan_files(spark, files, sch).withColumn(
+        _scan_files(spark, files, sch, m).withColumn(
             "__file", F.input_file_name()
         ),
         sch,
@@ -2426,10 +2480,11 @@ def _rewrite_matched(
     kept = [f for f in files if f not in touched]
     n_matched = 0
     new_files: list[str] = []
+    new_stats: dict[str, dict] = {}
     fparts: dict[str, dict] = {}
     if touched:
         matched_scope = _logical(
-            _scan_files(spark, sorted(touched), sch),
+            _scan_files(spark, sorted(touched), sch, m),
             sch,
         )
         n_matched = matched_scope.filter(hit).count()
@@ -2472,16 +2527,17 @@ def _rewrite_matched(
             # full-table scan per DML (an UPDATE ... SET could otherwise
             # write violating values). Validated from the WRITTEN bytes;
             # a violation leaves them unreferenced for GC.
+            new_stats = collect_file_stats(new_files, spark)
             cons = table_constraints(table)
             if cons:
                 check_constraints(
-                    _logical(spark.read.parquet(*new_files), sch), cons
+                    _read_written(spark, new_files, new_stats, sch), cons
                 )
     version = cur + 1
     _publish(
         table, version, kept + new_files, op,
         file_partitions=fparts or None,
-        file_stats=collect_file_stats(new_files, spark),
+        file_stats=new_stats,
         new_files=new_files,
         removed_files=sorted(touched),
     )
@@ -2527,13 +2583,13 @@ def delete_where_mor(spark: SparkSession, table: str, predicate) -> dict:
     # materialize the metadata pseudo-columns FIRST — they only resolve on
     # the file-source relation, not through later projections
     scan = (
-        _scan_files(spark, files, m.get("schema"))
+        _scan_files(spark, files, m.get("schema"), m)
         .withColumn("__f", F.col("_metadata.file_path"))
         .withColumn("__p", F.col("_metadata.row_index"))
     )
     if dvs:
         dv = (
-            spark.read.parquet(*dvs)
+            _read_position_deletes(spark, dvs)
             .select(F.col("file").alias("__f"), F.col("pos").alias("__p"))
             .distinct()
         )
@@ -2587,12 +2643,8 @@ def _check_metadata_path_roundtrip(
     if probe is None:
         return  # no rows anywhere → nothing a delete could miss
     rendered = (
-        spark.read.parquet(probe)
-        .select(
-            F.url_decode(
-                F.regexp_replace(F.col("_metadata.file_path"), _STRIP_SCHEME, "")
-            ).alias("p")
-        )
+        _scan_files(spark, [probe], m.get("schema"), m)
+        .select(_uri_to_path(F.col("_metadata.file_path")).alias("p"))
         .limit(1)
         .collect()
     )
@@ -2607,7 +2659,7 @@ def _check_metadata_path_roundtrip(
 
 def _table_columns(spark: SparkSession, m: dict) -> list[str]:
     """Head schema column names (union across files, evolution-aware)."""
-    return _scan_files(spark, m["files"], m.get("schema")).columns
+    return _scan_files(spark, m["files"], m.get("schema"), m).columns
 
 
 def _probe_file_with_rows(table: str, m: dict) -> str | None:
@@ -2657,7 +2709,7 @@ def _check_key_types(
     if sch is not None:
         head = {f["phys"]: f["type"] for f in sch["fields"]}
     else:
-        head = dict(_scan_files(spark, m["files"], None).dtypes)
+        head = dict(_scan_files(spark, m["files"], None, m).dtypes)
     bad = {
         k: (t, head[k]) for k, t in key_df.dtypes if k in head and t != head[k]
     }
@@ -2742,6 +2794,25 @@ def delete_keys_mor(
     }
 
 
+def _count_unique(src: DataFrame, keys: list[str], op: str) -> int:
+    """Row count of a MERGE/upsert source, raising ``ValueError`` unless
+    it is unique on ``keys`` — ONE grouped aggregate yields both the row
+    count and the distinct key count. Null keys group together, exactly as
+    ``distinct()`` treats them."""
+    import pyspark.sql.functions as F
+
+    row = (
+        src.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(F.sum("__n").alias("rows"), F.count(F.lit(1)).alias("keys"))
+        .first()
+    )
+    n = int(row["rows"] or 0)
+    if int(row["keys"]) != n:
+        raise ValueError(f"{op} source is not unique on {keys}")
+    return n
+
+
 def upsert_keys_mor(
     spark: SparkSession,
     table: str,
@@ -2783,9 +2854,7 @@ def upsert_keys_mor(
         keys = translate_keys(sch, keys, "upsert_keys_mor")
     src = source.persist()
     try:
-        n_src = src.count()
-        if src.select(*keys).distinct().count() != n_src:
-            raise ValueError(f"upsert source is not unique on {keys}")
+        n_src = _count_unique(src, keys, "upsert")
         # the streaming hot path: a MAPPED sharded table never hydrates —
         # schema/spec/sort checks are head-only, the roundtrip probe is
         # summary-guided, and the publish is a pure delta (O(|batch|)
@@ -2835,10 +2904,11 @@ def upsert_keys_mor(
             )
         else:
             data_files = _write_data_files(_sorted_for_write(src_proj, m), table)
+        data_stats = collect_file_stats(data_files, spark)
         cons = table_constraints(table)
         if cons:
             check_constraints(
-                _logical(spark.read.parquet(*data_files), sch), cons
+                _read_written(spark, data_files, data_stats, sch), cons
             )
         version = cur + 1
         entries = _manifest_eq_deletes(m) + [
@@ -2850,7 +2920,7 @@ def upsert_keys_mor(
             "upsert-keys", txn=txn,
             delete_files=_manifest_deletes(m), eq_deletes=entries,
             file_partitions=fparts,
-            file_stats=collect_file_stats(data_files, spark),
+            file_stats=data_stats,
             new_files=data_files, removed_files=[],
         )
         return {
@@ -2884,7 +2954,7 @@ def convert_equality_deletes(spark: SparkSession, table: str) -> dict:
     # and simpler: positions of (pos-delete survivors) minus (full-read
     # survivors) — both anti joins over the same base scan.
     base = (
-        _scan_files(spark, m["files"], m.get("schema"))
+        _scan_files(spark, m["files"], m.get("schema"), m)
         .withColumn("__f", F.col("_metadata.file_path"))
         .withColumn("__p", F.col("_metadata.row_index"))
     )
@@ -2892,7 +2962,7 @@ def convert_equality_deletes(spark: SparkSession, table: str) -> dict:
     dvs = _manifest_deletes(m)
     if dvs:
         dv = (
-            spark.read.parquet(*dvs)
+            _read_position_deletes(spark, dvs)
             .select(F.col("file").alias("__f"), F.col("pos").alias("__p"))
             .distinct()
         )
@@ -3206,7 +3276,7 @@ def compact_deletes(spark: SparkSession, table: str) -> dict:
             "version": cur, "operation": "compact-deletes",
             "files_rewritten": 0, "files_kept": len(files),
         }
-    dv_df = spark.read.parquet(*dvs)
+    dv_df = _read_position_deletes(spark, dvs)
     touched = {
         _normalize_file(r["file"])
         for r in dv_df.select("file").distinct().collect()
@@ -3247,7 +3317,7 @@ def compact_deletes(spark: SparkSession, table: str) -> dict:
     sort_cols = (m.get("sort_order") or {}).get("cols")
     for gkey, grp in groups.items():
         survivors = _apply_position_deletes(
-            spark, _scan_files(spark, grp, m.get("schema")), dvs
+            spark, _scan_files(spark, grp, m.get("schema"), m), dvs
         )
         if sort_cols and all(c in survivors.columns for c in sort_cols):
             # write-ordered table: Spark's split packing can merge several
@@ -3457,7 +3527,7 @@ def cluster_zorder(
         zorder_by = translate_keys(
             head_m["schema"], list(zorder_by), "cluster_zorder"
         )
-    df = _scan_files(spark, files, head_m.get("schema"))
+    df = _scan_files(spark, files, head_m.get("schema"), head_m)
     z = _zorder_column(df, zorder_by, bits=bits)
     head_fp = head_m.get("file_partitions", {})
     groups: dict = {}
@@ -3476,7 +3546,7 @@ def cluster_zorder(
         total = sum(_file_bytes(head_fs, f) for f in grp)
         n_out = max(1, round(total / (target_file_mb * 1024 * 1024)))
         clustered = (
-            _scan_files(spark, grp, head_m.get("schema"))
+            _scan_files(spark, grp, head_m.get("schema"), head_m)
             .withColumn("__z", z)
             .repartitionByRange(n_out, "__z")
             .sortWithinPartitions("__z")
@@ -3576,7 +3646,7 @@ def optimize(
     for key, grp in groups.items():
         total = sum(_file_bytes(head_fs, f) for f in grp)
         n_out = max(1, round(total / (target_file_mb * 1024 * 1024)))
-        merged = _scan_files(spark, grp, head_m.get("schema"))
+        merged = _scan_files(spark, grp, head_m.get("schema"), head_m)
         if sort_cols and all(c in merged.columns for c in sort_cols):
             # sorted table: a plain coalesce would merge each input file's
             # narrow band into one wide-envelope output, silently undoing
@@ -4140,11 +4210,9 @@ def merge_into(
 
     src = source.persist()
     try:
-        n_src = src.count()
-        if src.select(*keys).distinct().count() != n_src:
-            raise ValueError(f"merge source is not unique on {keys}")
+        n_src = _count_unique(src, keys, "merge")
 
-        target = _scan_files(spark, files, sch).withColumn(
+        target = _scan_files(spark, files, sch, head_m).withColumn(
             "__file", F.input_file_name()
         )
         # mapped tables: the column contract is the schema's physical set
@@ -4178,7 +4246,7 @@ def merge_into(
         table_cols = want_cols
         n_matched = 0
         if touched:
-            scope = _scan_files(spark, sorted(touched), sch)
+            scope = _scan_files(spark, sorted(touched), sch, head_m)
             if sch is not None:
                 # rewrite under the schema's physical columns: dropped
                 # columns' bytes age out here (the documented contract),
@@ -4230,16 +4298,17 @@ def merge_into(
             new_files = _write_data_files(
                 _sorted_for_write(replacement, head_m), table
             )
+        new_stats = collect_file_stats(new_files, spark)
         cons = table_constraints(table)
         if cons:
             check_constraints(
-                _logical(spark.read.parquet(*new_files), sch), cons
+                _read_written(spark, new_files, new_stats, sch), cons
             )
         version = cur + 1
         _publish(
             table, version, kept + new_files, "merge", txn=txn,
             file_partitions=fparts,
-            file_stats=collect_file_stats(new_files, spark),
+            file_stats=new_stats,
             new_files=new_files,
             removed_files=sorted(touched),
         )
@@ -4304,13 +4373,17 @@ def table_changes(
         from pyspark.sql.pandas.types import from_arrow_schema
 
         # Schema unifies BOTH endpoints' files (allowMissingColumns
-        # semantics, matching the fast path's mergeSchema reads): a column
+        # semantics, matching the fast path's union-schema reads): a column
         # present only in one endpoint must survive into the events, or
         # delete rows lose those values and rows differing only in that
         # column wrongly cancel.
         base = from_arrow_schema(
             _unified_arrow_schema(
-                list(dict.fromkeys(m_new["files"] + m_old["files"]))
+                list(dict.fromkeys(m_new["files"] + m_old["files"])),
+                {
+                    "file_stats": m_old.get("file_stats", {})
+                    | m_new.get("file_stats", {})
+                },
             )
         )
         names = [f.name for f in base.fields]
@@ -4330,7 +4403,7 @@ def table_changes(
 
     import pyspark.sql.functions as F
 
-    def _read(paths, dvs):
+    def _read(paths, dvs, m):
         """Each side reads with ITS version's position deletes applied —
         otherwise a later compaction would re-report MOR-deleted rows, and
         rows deleted inside the window would show as never-inserted."""
@@ -4338,8 +4411,8 @@ def table_changes(
             return None
         # scan both endpoints under the TO-version schema so widened types
         # align across the exceptAll diff (the final _logical renders with
-        # the same schema)
-        df = _scan_files(spark, paths, m_new.get("schema"))
+        # the same schema); ``m`` is the side whose stats list ``paths``
+        df = _scan_files(spark, paths, m_new.get("schema"), m)
         return _apply_position_deletes(spark, df, dvs)
 
     # MOR sidecar diffs on files present in BOTH versions: positions ADDED
@@ -4354,16 +4427,16 @@ def table_changes(
     if (d_new or d_old) and common:
         empty = spark.createDataFrame([], "file string, pos long")
         dv_new = (
-            spark.read.parquet(*d_new).select("file", "pos").distinct()
+            _read_position_deletes(spark, d_new).distinct()
             if d_new else empty
         )
         dv_old_df = (
-            spark.read.parquet(*d_old).select("file", "pos").distinct()
+            _read_position_deletes(spark, d_old).distinct()
             if d_old else empty
         )
         dv_added = dv_new.join(dv_old_df, ["file", "pos"], "left_anti")
         dv_removed = dv_old_df.join(dv_new, ["file", "pos"], "left_anti")
-        scan = _scan_files(spark, common, m_new.get("schema"))
+        scan = _scan_files(spark, common, m_new.get("schema"), m_new)
         cols0 = scan.columns
         keyed = scan.withColumn("__f", F.col("_metadata.file_path")).withColumn(
             "__p", F.col("_metadata.row_index")
@@ -4384,7 +4457,7 @@ def table_changes(
         mor_deletes = _at_positions(dv_added)
         mor_undeletes = _at_positions(dv_removed)
 
-    old, new = _read(removed, d_old), _read(added, d_new)
+    old, new = _read(removed, d_old, m_old), _read(added, d_new, m_new)
     if old is None and new is None:
         # no file-level diff — the whole change set (if any) is the MOR
         # sidecar diff below, so fall through with an empty PHYSICAL base
@@ -4393,7 +4466,7 @@ def table_changes(
             empty = read_snapshot(spark, table, version=to_version).limit(0)
             return empty.withColumn("_change_type", F.lit("insert")).limit(0)
         out = (
-            _scan_files(spark, common, m_new.get("schema"))
+            _scan_files(spark, common, m_new.get("schema"), m_new)
             .limit(0)
             .withColumn("_change_type", F.lit("insert"))
         )
