@@ -43,7 +43,7 @@ def registered(spark):
 
 @pytest.fixture()
 def seg4(monkeypatch):
-    """Force tiny segments so small fixtures exercise the sharded path."""
+    """Force tiny segments so small fixtures span many segments."""
     monkeypatch.setenv("SPARK_GRAFT_MANIFEST_SEGMENT_FILES", "4")
 
 
@@ -181,31 +181,6 @@ def test_segment_skipping_on_column_bounds(registered, tmp_path, seg4):
         .filter("id > 4990").count()
     )
     assert got == 500
-
-
-def test_inline_under_threshold_and_transition(registered, tmp_path):
-    """Tables at or under the threshold keep the inline single-JSON format
-    (legacy fallback is the SAME code path); crossing the threshold
-    transitions in place with no reader change."""
-    spark = registered
-    t = str(tmp_path / "t")
-    commit_append(_events(spark, 0, 50).coalesce(2), t)
-    head = _read_manifest_head(t, current_version(t))
-    assert "segments" not in head and "files" in head
-    # cross the threshold
-    os.environ["SPARK_GRAFT_MANIFEST_SEGMENT_FILES"] = "4"
-    try:
-        commit_append(_events(spark, 50, 100).coalesce(3), t)
-        head2 = _read_manifest_head(t, current_version(t))
-        assert head2.get("format") == 2
-        assert read_snapshot(spark, t).count() == 100
-        # and back under it (big overwrite → small table) re-inlines
-        S.commit_overwrite(_events(spark, 0, 10).coalesce(1), t)
-        head3 = _read_manifest_head(t, current_version(t))
-        assert "segments" not in head3
-        assert read_snapshot(spark, t).count() == 10
-    finally:
-        del os.environ["SPARK_GRAFT_MANIFEST_SEGMENT_FILES"]
 
 
 def test_vacuum_gcs_unreferenced_segments(registered, tmp_path, seg4):
@@ -959,87 +934,6 @@ def test_drop_clone_delete_table_refuses_with_live_forks(
     assert not os.path.isdir(b)
 
 
-def test_upgrade_manifest_backfills_types_zero_data_reads(
-    registered, tmp_path, seg4, monkeypatch
-):
-    """VERDICT r9 #4 pin: a table sharded before the r9 types summaries
-    (simulated by stripping the blocks from the head's group/segment
-    entries) falls back to full hydration on every unmapped schema
-    resolve. upgrade_manifest re-stamps it in ONE metadata commit with
-    ZERO data-file reads (_file_types patched to raise) — after it, the
-    O(head) probe answers and a second run publishes nothing."""
-    import json as J
-
-    from web_analytics_on_aws_spark.sources.snapshot_datasource import (
-        _segments_arrow_schema,
-    )
-
-    spark = registered
-    monkeypatch.setenv("SPARK_GRAFT_MANIFEST_SEGMENTS_PER_GROUP", "2")
-    t = str(tmp_path / "t")
-    _build_sharded(spark, t)
-    v = current_version(t)
-    hp = S._manifest_path(t, v)
-    with open(hp) as f:
-        head = J.load(f)
-    assert head.get("groups"), "fixture must exercise the grouped layer"
-    for s in head.get("groups", []) + head.get("segments", []):
-        s.pop("types", None)
-    with open(hp, "w") as f:
-        J.dump(head, f)
-    assert _segments_arrow_schema(_read_manifest_head(t, v)) is None
-
-    def _boom(p):
-        raise AssertionError(f"data-file read during upgrade: {p}")
-
-    monkeypatch.setattr(S, "_file_types", _boom)
-    res = S.upgrade_manifest(t)
-    monkeypatch.undo()
-    assert res["upgraded"] and res["version"] == v + 1
-    assert res["footer_reads"] == 0 and res["segments_rewritten"] == 0
-    new_head = _read_manifest_head(t, current_version(t))
-    sch = _segments_arrow_schema(new_head)
-    assert sch is not None and set(sch.names) == {"id", "ev", "v"}
-    assert read_snapshot(spark, t).count() == 500
-    # idempotent: nothing left to change, nothing published
-    res2 = S.upgrade_manifest(t)
-    assert not res2["upgraded"] and current_version(t) == v + 1
-
-
-def test_upgrade_manifest_stamps_legacy_entries_from_footers(
-    registered, tmp_path, seg4, monkeypatch
-):
-    """Legacy tier: entries written before per-file types (simulated by a
-    None-returning _file_types during the build) need one FOOTER read per
-    member — the upgrade rewrites those segments as new immutable files
-    (originals keep serving time travel) and the schema probe is O(head)
-    after."""
-    from web_analytics_on_aws_spark.sources.snapshot_datasource import (
-        _segments_arrow_schema,
-    )
-
-    spark = registered
-    t = str(tmp_path / "t")
-    monkeypatch.setattr(S, "_file_types", lambda p: None)
-    _build_sharded(spark, t)
-    monkeypatch.undo()
-    v = current_version(t)
-    assert _segments_arrow_schema(_read_manifest_head(t, v)) is None
-    segdir = os.path.join(t, "manifests", "segs")
-    before = set(os.listdir(segdir))
-    res = S.upgrade_manifest(t)
-    assert res["upgraded"] and res["footer_reads"] > 0
-    assert res["segments_rewritten"] > 0
-    # originals still on disk for older versions; new files added
-    assert before <= set(os.listdir(segdir))
-    sch = _segments_arrow_schema(_read_manifest_head(t, current_version(t)))
-    assert sch is not None and set(sch.names) == {"id", "ev", "v"}
-    assert read_snapshot(spark, t).count() == 500
-    assert read_snapshot(spark, t, version=v).count() == 500  # time travel
-    res2 = S.upgrade_manifest(t)
-    assert not res2["upgraded"]
-
-
 def test_parallel_vacuum_fold_matches_serial(
     registered, tmp_path, seg4, monkeypatch
 ):
@@ -1073,44 +967,6 @@ def test_parallel_vacuum_fold_matches_serial(
         )
     }
     assert set(os.listdir(os.path.join(t, "manifests", "segs"))) == live
-
-
-def test_upgrade_manifest_counter_skips_unupgradeable(
-    registered, tmp_path, seg4
-):
-    """ADVICE r10: a segment whose members GENUINELY disagree on a
-    column's physical type can never gain a types block —
-    segments_resummarized must stay 0 on every re-run over it (the old
-    code counted the attempt before checking the outcome, overstating
-    the CLI verb's work on each run)."""
-    import json as J
-
-    spark = registered
-    t = str(tmp_path / "t")
-    _build_sharded(spark, t)
-    v = current_version(t)
-    hp = S._manifest_path(t, v)
-    with open(hp) as f:
-        head = J.load(f)
-    assert head.get("segments"), "fixture must leave an inline tail"
-    target = head["segments"][0]
-    target.pop("types", None)
-    # plant the member-type conflict through the format-agnostic helpers
-    # (segments are parquet by default now): rewrite the member list to
-    # a fresh segment file and point the head's summary at it
-    entries = S._read_segment(t, target["path"])["entries"]
-    first = next(iter(entries.values()))
-    assert first.get("stats", {}).get("types"), "fixture needs typed entries"
-    first["stats"]["types"]["id"] = "string"  # conflicts with the others
-    target["path"] = S._write_segment_entries(t, entries)
-    with open(hp, "w") as f:
-        J.dump(head, f)
-    for _ in range(2):  # idempotent: counters stay 0 on every re-run
-        res = S.upgrade_manifest(t)
-        assert not res["upgraded"]
-        assert res["segments_resummarized"] == 0
-        assert res["segments_rewritten"] == 0
-        assert current_version(t) == v
 
 
 def test_metadata_ddl_reads_no_segments_on_mapped_sharded(

@@ -54,6 +54,23 @@ def _stats_full(table):
     return _read_manifest(table, current_version(table)).get("file_stats", {})
 
 
+def _n_segments(table):
+    """Segment files the current head references (groups expanded)."""
+    from web_analytics_on_aws_spark.sources.snapshots import (
+        _effective_segments,
+        _read_manifest_head,
+    )
+
+    head = _read_manifest_head(table, current_version(table))
+    return len(_effective_segments(table, head))
+
+
+def _data_opens(opens):
+    """The opened paths that are NOT manifest segments."""
+    segs = os.path.join("manifests", "segs") + os.sep
+    return [p for p in opens if segs not in str(p)]
+
+
 def _mk(spark, tmp_path, name="t"):
     t = str(tmp_path / name)
     # three value-disjoint files: k in [0,10), [100,110), [200,210)
@@ -101,15 +118,25 @@ def test_planning_skips_without_footer_io(registered, tmp_path, monkeypatch):
         return real(path, *a, **kw)
 
     monkeypatch.setattr(pq, "ParquetFile", counting)
-    assert _kept(t, [EqualTo(("k",), 105)]) == 1
-    assert _kept(t, [GreaterThan(("k",), 150)]) == 1
-    assert _kept(t, [LessThan(("k",), 50)]) == 1
-    assert _kept(t, [In(("k",), (5, 205))]) == 2
+    n_segs = _n_segments(t)
+
+    def kept(filters):
+        opens.clear()
+        n = _kept(t, filters)
+        # planning never touched a data-file footer; the only parquet
+        # opens are the manifest's own segments, each at most once
+        assert _data_opens(opens) == []
+        assert len(opens) <= n_segs
+        return n
+
+    assert kept([EqualTo(("k",), 105)]) == 1
+    assert kept([GreaterThan(("k",), 150)]) == 1
+    assert kept([LessThan(("k",), 50)]) == 1
+    assert kept([In(("k",), (5, 205))]) == 2
     # string bounds prune lexicographically: "u105" sorts inside [u0,u9]
     # so that file survives too — 2 kept, the [u200,u209] file pruned
-    assert _kept(t, [EqualTo(("s",), "u105")]) == 2
-    assert _kept(t, [EqualTo(("k",), 99999)]) == 0
-    assert opens == []  # planning never touched a footer
+    assert kept([EqualTo(("s",), "u105")]) == 2
+    assert kept([EqualTo(("k",), 99999)]) == 0
 
 
 def test_pruning_results_match_data(registered, tmp_path):
@@ -326,11 +353,18 @@ def test_show_table_partitions_manifest_only(registered, tmp_path, monkeypatch):
 
     import pyarrow.parquet as pq
 
-    def boom(*a, **kw):
-        raise AssertionError("show_table_partitions opened a footer")
+    real = pq.ParquetFile
+    opens = []
 
-    monkeypatch.setattr(pq, "ParquetFile", boom)
+    def counting(path, *a, **kw):
+        opens.append(path)
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
     parts = show_table_partitions(t)
+    # no data-file footer opened; only the manifest's segments, each once
+    assert _data_opens(opens) == []
+    assert len(opens) <= _n_segments(t)
     by_val = {
         p["values"]["ev"]: p for p in parts if p["values"] is not None
     }
@@ -410,14 +444,18 @@ def test_partition_census_counts_statsless_groups(registered, tmp_path):
     returns rows=None for those, by contract). Such groups fall back to
     one scan of exactly their files; stats-backed groups stay
     manifest-only."""
-    import json
-
     import pyspark.sql.functions as F
 
     from web_analytics_on_aws_spark.sources.partitioning import (
         partition_value_census,
         set_partition_spec,
         show_table_partitions,
+    )
+    from web_analytics_on_aws_spark.sources.snapshots import (
+        _publish_raw,
+        _read_manifest_head,
+        _summarize_segment,
+        _write_segment_entries,
     )
 
     spark = registered
@@ -429,18 +467,23 @@ def test_partition_census_counts_statsless_groups(registered, tmp_path):
     commit_append(df1.limit(0), t)
     set_partition_spec(spark, t, [("ev", "identity")])
     commit_append(df1, t)
-    # simulate a legacy (pre-stats) commit: strip this head's file_stats
+    # simulate files committed without stats: re-home every entry in a
+    # stats-less segment and publish a head over it
     v = current_version(t)
-    mp = os.path.join(t, "manifests", sorted(
-        f for f in os.listdir(os.path.join(t, "manifests"))
-        if f.endswith(".json")
-    )[-1])
-    with open(mp) as fh:
-        m = json.load(fh)
-    m.pop("file_stats", None)
-    os.remove(mp)
-    with open(mp, "w") as fh:
-        json.dump(m, fh)
+    m = _read_manifest(t, v)
+    fp = m.get("file_partitions", {})
+    entries = {
+        f: {"seq": m["file_seq"][f]} | ({"part": fp[f]} if f in fp else {})
+        for f in m["files"]
+    }
+    rel = _write_segment_entries(t, entries)
+    head = _read_manifest_head(t, v)
+    head.pop("groups", None)
+    _publish_raw(t, v + 1, head | {
+        "version": v + 1,
+        "committed_at": head["committed_at"] + 1e-3,
+        "segments": [_summarize_segment(rel, entries)],
+    })
     # a later, stats-carrying commit adds a third value + more of 'view'
     df2 = spark.range(500, 560).select(
         F.col("id"),

@@ -584,26 +584,6 @@ def test_streaming_mor_upsert_sink(spark, tmp_path):
     assert len(eqd(m)) >= 1
 
 
-def test_eq_delete_reaches_pre_sequence_files(spark, two_file_table):
-    """Regression: a table whose manifests predate sequence stamping (no
-    file_seq key) must still be reachable by a first equality delete —
-    carried unstamped files default to an OLDER sequence, never the
-    delete's own."""
-    import json as _json
-
-    from web_analytics_on_aws_spark.sources.snapshots import delete_keys_mor
-
-    t = two_file_table
-    mp = os.path.join(t, "manifests", f"v{current_version(t)}.json")
-    with open(mp) as fh:
-        m = _json.load(fh)
-    m.pop("file_seq", None)  # simulate a pre-sequence-format manifest
-    with open(mp, "w") as fh:
-        _json.dump(m, fh)
-    delete_keys_mor(spark, t, spark.createDataFrame([(3,)], "id long"))
-    assert _ids(spark, t) == sorted(set(range(20)) - {3})
-
-
 def test_restore_preserves_equality_delete_semantics(spark, tmp_path):
     """Regression: RESTORE must re-pin the restored state's file
     sequences — restamping restored files as new would put them above the

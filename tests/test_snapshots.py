@@ -216,8 +216,8 @@ def test_append_retries_past_concurrent_commit(spark, tmp_path):
     the head and lands at vN+1 including BOTH writers' rows."""
     from web_analytics_on_aws_spark.sources.snapshots import (
         CommitConflict,
-        _manifest_path,
         _publish,
+        _read_manifest,
         delete_where,
     )
 
@@ -228,9 +228,7 @@ def test_append_retries_past_concurrent_commit(spark, tmp_path):
     from web_analytics_on_aws_spark.sources.snapshots import _write_data_files
 
     stolen = _write_data_files(other, t)
-    import json
-
-    v1_files = json.load(open(_manifest_path(t, 1)))["files"]
+    v1_files = _read_manifest(t, 1)["files"]
     _publish(t, 2, v1_files + stolen, "append")
 
     v = commit_append(_df(spark, 200, 210), t)  # raced: must land at v3
@@ -244,7 +242,7 @@ def test_append_retries_past_concurrent_commit(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(CommitConflict):
-        _publish(t, 3, json.load(open(_manifest_path(t, 3)))["files"], "append")
+        _publish(t, 3, _read_manifest(t, 3)["files"], "append")
     assert delete_where is not None  # rewrite path shares _publish
 
 

@@ -651,10 +651,11 @@ def snapshot_zorder_partition_box_probe(
 def _ensure_sharded_day_table(spark: SparkSession, sf_dir: str) -> str:
     """A day-partitioned events table whose manifest is SHARDED (round 8:
     manifest-list head + bounded range-keyed segments): built with a tiny
-    segment target so even the sf0.01 fixture crosses the inline
-    threshold, committed as three appends so the head carries reused AND
+    segment target so even the sf0.01 fixture spans many segments and
+    groups, committed as three appends so the head carries reused AND
     fresh segments. Build-time assertion pins that the head really is
-    format 2 — the query would otherwise silently test the inline path."""
+    multi-segment and grouped — the query would otherwise silently test a
+    one-segment head."""
     from web_analytics_on_aws_spark.sources import partitioning, snapshots
 
     src = os.path.join(sf_dir, "events.parquet")
@@ -923,114 +924,6 @@ def snapshot_clone_chain_rollup(
         .groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-
-
-def _ensure_columnar_straddle_table(spark: SparkSession, sf_dir: str) -> str:
-    """A sharded day-partitioned events table that LIVED THROUGH the
-    round-12 segment-format change: first append committed under the
-    legacy JSON segment format, converted in place by
-    ``convert_segment_format`` (one metadata commit, zero data I/O),
-    then appended again under the columnar default — so the head mixes
-    converted and natively-columnar parquet segments and planning,
-    pruning, and reads must be format-blind. Build asserts the table
-    really straddled (a json segment existed pre-convert, none are
-    referenced post-convert, format 2 head)."""
-    import glob as _glob
-
-    from web_analytics_on_aws_spark.sources import partitioning, snapshots
-
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint(src)
-    table, marker, fresh = _scratch(sf_dir, "colseg_straddle1", fp)
-    if fresh and snapshots.current_version(table) is not None:
-        return table
-    shutil.rmtree(table, ignore_errors=True)
-    old = os.environ.get("SPARK_GRAFT_MANIFEST_SEGMENT_FILES")
-    old_f = os.environ.get("SPARK_GRAFT_SEGMENT_FORMAT")
-    os.environ["SPARK_GRAFT_MANIFEST_SEGMENT_FILES"] = "4"
-    try:
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-        os.environ["SPARK_GRAFT_SEGMENT_FORMAT"] = "json"
-        snapshots.commit_append(ev.limit(0), table)
-        partitioning.set_partition_spec(spark, table, [("ts", "day")])
-        snapshots.commit_append(ev.filter("event_id % 2 = 0"), table)
-        segdir = os.path.join(table, "manifests", "segs")
-        assert _glob.glob(os.path.join(segdir, "seg-*.json"))
-        if old_f is None:
-            os.environ.pop("SPARK_GRAFT_SEGMENT_FORMAT", None)
-        else:
-            os.environ["SPARK_GRAFT_SEGMENT_FORMAT"] = old_f
-        res = snapshots.convert_segment_format(table)
-        assert res["converted"] and res["segments_rewritten"] > 0
-        snapshots.commit_append(ev.filter("event_id % 2 = 1"), table)
-        head = snapshots._read_manifest_head(
-            table, snapshots.current_version(table)
-        )
-        assert head.get("format") == 2
-        assert all(
-            s["path"].endswith(".parquet")
-            for s in snapshots._effective_segments(table, head)
-        )
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_MANIFEST_SEGMENT_FILES", None)
-        else:
-            os.environ["SPARK_GRAFT_MANIFEST_SEGMENT_FILES"] = old
-        if old_f is None:
-            os.environ.pop("SPARK_GRAFT_SEGMENT_FORMAT", None)
-        else:
-            os.environ["SPARK_GRAFT_SEGMENT_FORMAT"] = old_f
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    with open(marker, "w") as fh:
-        json.dump(fp, fh)
-    return table
-
-
-@query(
-    "snapshot_columnar_segment_rollup",
-    oracle="""
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-    FROM events
-    WHERE ts < TIMESTAMP '2024-01-08 00:00:00' AND value > 10
-    GROUP BY event_type
-    """,
-)
-def snapshot_columnar_segment_rollup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Early-window rollup over a table that MIGRATED segment formats
-    mid-life (round 12): half its rows were committed under legacy JSON
-    manifest segments, converted in place to columnar parquet segments
-    (``convert_segment_format`` — one metadata commit, zero data I/O,
-    the migration Iceberg ships as its Avro manifest format), and half
-    appended natively columnar. Planning descends the same head → group
-    → segment skip over both generations; the oracle runs the window
-    over the source parquet, so any entry lost or mangled in the format
-    hop is a row-count or hash mismatch. Scale rationale: the columnar
-    fold reads the path column alone — SCALE.md r12 measures the vacuum
-    bound this removes. Pins: tests/test_segment_format.py."""
-    table = _ensure_columnar_straddle_table(spark, sf_dir)
-    cutoff = "2024-01-08 00:00:00"
-    return (
-        _snapshot_read(spark, table, columns="ts,user_id,event_type,value")
-        .filter(
-            (F.col("ts") < F.lit(cutoff).cast("timestamp"))
-            & (F.col("value") > 10)
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.countDistinct("user_id").cast("bigint").alias("n_users"),
             F.sum(F.col("value").cast("decimal(18,6)"))
             .cast("double")
             .alias("total_value"),

@@ -29,27 +29,16 @@ to backfill).
 from __future__ import annotations
 
 import collections
-import json
-import os
 from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-
-def _versions(table: str) -> list[int]:
-    mdir = os.path.join(table, "manifests")
-    if not os.path.isdir(mdir):
-        return []
-    return sorted(
-        int(n[1:-5])
-        for n in os.listdir(mdir)
-        if n.startswith("v") and n.endswith(".json")
-    )
+from web_analytics_on_aws_spark.sources.snapshots import _versions
 
 
 def _manifest(table: str, version: int) -> dict:
-    # snapshots._read_manifest, not a raw json.load: sharded (format-2)
-    # manifests keep per-file maps in segment files the hydrator folds in
+    # snapshots._read_manifest, not a raw json.load: the per-file maps
+    # live in segment files the hydrator folds in
     from web_analytics_on_aws_spark.sources.snapshots import _read_manifest
 
     return _read_manifest(table, version)
@@ -100,9 +89,7 @@ def _eq_positions(table: str, version: int, files: set[str]) -> dict:
         if not dead:
             continue
         for f in target:
-            # files from pre-sequence manifests default older than any
-            # eq delete (eq deletes postdate the file_seq format)
-            if fseq.get(f, 0) >= dseq:
+            if fseq[f] >= dseq:
                 continue
             t = pq.read_table(f, columns=[k for k in keys])
             have = set(t.column_names)

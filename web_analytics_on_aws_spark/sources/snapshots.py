@@ -1,5 +1,5 @@
 """Minimal snapshot table format: atomic commits, time travel, vacuum —
-plain-parquet + JSON manifests, no table-format jars.
+plain-parquet data files + one manifest format, no table-format jars.
 
 The reference's iceberg variants delegate exactly these semantics to
 AWS-managed Iceberg (S9/S12 in SURVEY §2.1: atomic micro-batch commits,
@@ -8,7 +8,12 @@ re-creates the *mechanism* so the engine has real table semantics on any
 filesystem:
 
 - data files are immutable parquet parts under ``data/``; a **manifest**
-  (``vN.json``) lists the exact file set of snapshot N;
+  lists the exact file set of snapshot N. It has one on-disk form: a JSON
+  head (``manifests/vN.json``: table metadata plus segment and group
+  summaries) over immutable parquet segments (``manifests/segs/
+  seg-*.parquet``, one row per data file) and JSON group files
+  (``grp-*.json``, lists of segment summaries) — see the sharding banner
+  below;
 - a commit writes new data files, then publishes the next manifest via
   write-temp + ``os.replace`` — atomic on POSIX, so readers always see a
   complete snapshot (never a half-written file list);
@@ -41,7 +46,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_DIR = "manifests"
-SEGS_SUBDIR = "segs"       # bounded manifest segments (sharded manifests)
+SEGS_SUBDIR = "segs"       # bounded manifest segments and group files
 DATA_DIR = "data"
 REFS_DIR = "refs"          # immutable tag pointers (refs.py)
 BRANCHES_DIR = "branches"  # zero-copy writable forks (refs.py)
@@ -73,10 +78,10 @@ def current_version(table: str) -> int | None:
 
 
 def _read_manifest_head(table: str, version: int) -> dict:
-    """The manifest HEAD document alone — on a sharded manifest (format 2)
-    this is the manifest-list: table metadata (schema, specs, sort order,
-    constraints, txns, delete sidecars) plus bounded ``segments`` entries,
-    never the per-file maps. Head-only consumers (sort order, constraints,
+    """The manifest HEAD document alone — the manifest-list: table
+    metadata (schema, specs, sort order, constraints, txns, delete
+    sidecars) plus bounded ``segments``/``groups`` entries, never the
+    per-file maps. Head-only consumers (sort order, constraints,
     txn stamps, commit times) stay O(1) regardless of file count."""
     with open(_manifest_path(table, version)) as f:
         return json.load(f)
@@ -91,121 +96,84 @@ def _segment_abspath(table: str, rel: str) -> str:
     return os.path.join(table, MANIFEST_DIR, rel)
 
 
-def _segment_format() -> str:
-    """File format for NEW manifest segment writes: ``parquet``
-    (columnar, the default) or ``json`` (the legacy format).
-    ``SPARK_GRAFT_SEGMENT_FORMAT`` selects. Reads always dispatch on the
-    segment file's extension, so mixed-format tables — and zero-copy
-    forks that straddle the format change — read seamlessly; the head's
-    summaries are format-neutral (they store the member path verbatim).
-
-    Why columnar (the r9/r10-documented next tier, Iceberg's own Avro
-    manifest rationale): the 10M-file vacuum was bounded by ONE
-    stdlib-JSON parse of 2.76 GB of segment text (399 s, SCALE.md r10).
-    A columnar segment lets the vacuum live-set fold read the
-    dictionary-encoded ``path`` column alone — no byte of per-file
-    stats is even decompressed — and zstd+dictionary shrinks the bytes
-    on disk several-fold on top."""
-    fmt = os.environ.get("SPARK_GRAFT_SEGMENT_FORMAT", "parquet").lower()
-    if fmt not in ("parquet", "json"):
-        raise ValueError(
-            f"SPARK_GRAFT_SEGMENT_FORMAT={fmt!r}: use 'parquet' or 'json'"
-        )
-    return fmt
-
-
 def _read_segment(table: str, rel: str) -> dict:
     """One manifest segment: ``{"entries": {path: {"seq", "part"?,
     "stats"?}}}`` — an immutable, bounded slice of the version's file set
     (written once by ``_segmentize``, shared by reference across every
-    later version that carries its files unchanged). Dispatches on the
-    file extension: columnar (parquet) segments hold one row per member
-    with ``part``/``stats`` as compact-JSON string columns (null = key
-    absent), reconstructed here to the exact legacy entry shape."""
-    ap = _segment_abspath(table, rel)
-    if rel.endswith(".parquet"):
-        import pyarrow.parquet as pq
+    later version that carries its files unchanged). A segment is a
+    parquet file with one row per member and ``part``/``stats`` as
+    compact-JSON string columns (null = key absent), reconstructed here
+    to the entry shape."""
+    import pyarrow.parquet as pq
 
-        # use_threads=False: a bounded segment is a few thousand rows —
-        # read_table's default per-call thread-pool spin costs ~3 ms
-        # against a ~0.3 ms single-threaded read (measured 13× on
-        # 100-entry segments); callers that fan out (the vacuum pool,
-        # planning's survivor loop) supply the parallelism themselves
-        cols = pq.ParquetFile(ap).read(use_threads=False).to_pydict()
-        # decode each JSON-string column as ONE synthesized array parse —
-        # a single C-level json.loads call instead of one per row
-        # (measured 1.5× on a 5k-member segment; nulls ride as literal
-        # JSON nulls and map back to absent keys below)
-        parts = (
-            json.loads(
-                "[%s]"
-                % ",".join(
-                    p if p is not None else "null" for p in cols["part"]
-                )
-            )
-            if cols["part"]
-            else []
+    # use_threads=False: a bounded segment is a few thousand rows —
+    # read_table's default per-call thread-pool spin costs ~3 ms against
+    # a ~0.3 ms single-threaded read (measured 13× on 100-entry
+    # segments); callers that fan out (the vacuum pool, planning's
+    # survivor loop) supply the parallelism themselves
+    cols = (
+        pq.ParquetFile(_segment_abspath(table, rel))
+        .read(use_threads=False)
+        .to_pydict()
+    )
+    # decode each JSON-string column as ONE synthesized array parse — a
+    # single C-level json.loads call instead of one per row (measured
+    # 1.5× on a 5k-member segment; nulls ride as literal JSON nulls and
+    # map back to absent keys below)
+    parts = (
+        json.loads(
+            "[%s]"
+            % ",".join(p if p is not None else "null" for p in cols["part"])
         )
-        stats = (
-            json.loads(
-                "[%s]"
-                % ",".join(
-                    s if s is not None else "null" for s in cols["stats"]
-                )
-            )
-            if cols["stats"]
-            else []
+        if cols["part"]
+        else []
+    )
+    stats = (
+        json.loads(
+            "[%s]"
+            % ",".join(s if s is not None else "null" for s in cols["stats"])
         )
-        entries: dict[str, dict] = {}
-        for p, sq, pt, st in zip(cols["path"], cols["seq"], parts, stats):
-            e: dict = {"seq": sq}
-            if pt is not None:
-                e["part"] = pt
-            if st is not None:
-                e["stats"] = st
-            entries[p] = e
-        return {"entries": entries}
-    with open(ap) as f:
-        return json.load(f)
+        if cols["stats"]
+        else []
+    )
+    entries: dict[str, dict] = {}
+    for p, sq, pt, st in zip(cols["path"], cols["seq"], parts, stats):
+        e: dict = {"seq": sq}
+        if pt is not None:
+            e["part"] = pt
+        if st is not None:
+            e["stats"] = st
+        entries[p] = e
+    return {"entries": entries}
 
 
 def _segment_entry_paths(table: str, rel: str) -> list[str]:
     """Member PATHS of one segment — all the vacuum live-set fold needs.
-    Columnar segments read the ``path`` column alone (the stats/part
-    strings are never even decompressed, let alone JSON-decoded — this
-    is the 100 TB win of the columnar format; see ``_segment_format``);
-    JSON segments fall back to the full parse."""
-    if rel.endswith(".parquet"):
-        import pyarrow.parquet as pq
+    Reads the ``path`` column alone: the stats/part strings are never
+    even decompressed, let alone JSON-decoded (the 10M-file vacuum was
+    once bounded by one stdlib-JSON parse of 2.76 GB of segment text,
+    399 s — SCALE.md r10)."""
+    import pyarrow.parquet as pq
 
-        return (
-            pq.ParquetFile(_segment_abspath(table, rel))
-            .read(columns=["path"], use_threads=False)
-            .column("path")
-            .to_pylist()
-        )
-    return list(_read_segment(table, rel)["entries"])
+    return (
+        pq.ParquetFile(_segment_abspath(table, rel))
+        .read(columns=["path"], use_threads=False)
+        .column("path")
+        .to_pylist()
+    )
 
 
-def _write_segment_entries(
-    table: str, entries: dict[str, dict], fmt: str | None = None
-) -> str:
-    """Write one immutable segment file in ``fmt`` (default: the
-    configured ``_segment_format``) and return its relative path. The
-    columnar layout is one row per member — ``path`` (dict-encoded),
-    ``seq``, and ``part``/``stats`` as compact-JSON strings (null when
-    the entry lacks the key; entry values are JSON-native by
-    construction, so the string hop round-trips exactly)."""
-    segdir = os.path.join(table, MANIFEST_DIR, SEGS_SUBDIR)
-    os.makedirs(segdir, exist_ok=True)
-    if (fmt or _segment_format()) == "json":
-        rel = os.path.join(SEGS_SUBDIR, f"seg-{uuid.uuid4().hex[:16]}.json")
-        with open(_segment_abspath(table, rel), "w") as f:
-            json.dump({"entries": entries}, f)
-        return rel
+def _write_segment_entries(table: str, entries: dict[str, dict]) -> str:
+    """Write one immutable segment file and return its relative path.
+    The layout is one row per member — ``path`` (dict-encoded), ``seq``,
+    and ``part``/``stats`` as compact-JSON strings (null when the entry
+    lacks the key; entry values are JSON-native by construction, so the
+    string hop round-trips exactly), zstd-compressed."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    segdir = os.path.join(table, MANIFEST_DIR, SEGS_SUBDIR)
+    os.makedirs(segdir, exist_ok=True)
     dump = json.dumps
     paths, seqs, parts, stats = [], [], [], []
     for p, e in entries.items():
@@ -236,7 +204,7 @@ def _write_segment_entries(
 
 def _read_segments(table: str, segs: list[dict]) -> list[dict]:
     """Entries of many segments. Local paths read serially — page-cache
-    json loads are CPU-bound and a thread pool only adds overhead
+    segment decodes are CPU-bound and a thread pool only adds overhead
     (measured) — but a REMOTE-scheme table pays a network round-trip per
     segment, where 1000 serial ~20 ms fetches would stall the driver
     20 s: those fan out over threads so hydration is latency-bound, not
@@ -253,13 +221,6 @@ def _read_segments(table: str, segs: list[dict]) -> list[dict]:
                 lambda s: _read_segment(table, s["path"])["entries"], segs
             )
         )
-
-
-def _is_sharded(head: dict) -> bool:
-    """Sharded (format-2) head? The inline tail may legitimately be empty
-    once every segment has been spilled into groups, so shardedness is
-    'either layer present', never a truthiness check on ``segments``."""
-    return "segments" in head or "groups" in head
 
 
 def _read_group(table: str, rel: str) -> list[dict]:
@@ -311,7 +272,7 @@ def _read_groups(table: str, groups: list[dict]) -> list[list[dict]]:
 
 
 def _effective_segments(table: str, head: dict) -> list[dict]:
-    """Every segment summary of a sharded head: the grouped layer
+    """Every segment summary of a head: the grouped layer
     expanded plus the inline tail. Full-hydration consumers only — the
     planning/commit hot paths prune at the GROUP layer first and never
     expand clean groups."""
@@ -323,14 +284,11 @@ def _effective_segments(table: str, head: dict) -> list[dict]:
 
 
 def _hydrate_manifest(table: str, m: dict) -> dict:
-    """Materialize a sharded head into the legacy logical manifest shape
-    (``files`` / ``file_seq`` / ``file_partitions`` / ``file_stats``) so
-    every existing consumer keeps working. Inline (format-1) manifests
-    pass through untouched. Planning hot paths that only need the
-    predicate-intersecting slice use the head + per-segment summaries
-    directly (SnapshotReader) instead of this full fold."""
-    if not _is_sharded(m):
-        return m
+    """Fold a head's segments into the full logical manifest (``files`` /
+    ``file_seq`` / ``file_partitions`` / ``file_stats``). Planning hot
+    paths that only need the predicate-intersecting slice use the head +
+    per-segment summaries directly (SnapshotReader) instead of this full
+    fold."""
     files: list[str] = []
     seqs: dict[str, int] = {}
     fp: dict[str, dict] = {}
@@ -358,14 +316,8 @@ def _read_manifest(table: str, version: int) -> dict:
 
 
 def _manifest_txns(m: dict) -> dict[str, int]:
-    """Per-app txn stamps recorded in a manifest (legacy single-``txn``
-    manifests normalize to a one-entry map)."""
-    txns = {a: int(b) for a, b in m.get("txns", {}).items()}
-    legacy = m.get("txn")
-    if legacy:
-        app, batch = legacy["app"], int(legacy["batch"])
-        txns[app] = max(txns.get(app, batch), batch)
-    return txns
+    """Per-app txn stamps recorded in a manifest."""
+    return {a: int(b) for a, b in m.get("txns", {}).items()}
 
 
 def _manifest_deletes(m: dict) -> list[str]:
@@ -383,10 +335,8 @@ def _manifest_eq_deletes(m: dict) -> list[dict]:
 
 
 def _manifest_file_seq(m: dict) -> dict[str, int]:
-    """Per-data-file commit sequence (the version that added the file).
-    Files from pre-sequence manifests default to the manifest's own
-    version on their next carry — safe, since equality deletes can only
-    postdate this format."""
+    """Per-data-file commit sequence (the version that added the file) of
+    a hydrated manifest."""
     return {f: int(s) for f, s in m.get("file_seq", {}).items()}
 
 
@@ -479,18 +429,16 @@ def _publish(
             vs = [v for v in _versions(table) if v < version]
             if vs:
                 prev_raw = _read_manifest_head(table, vs[-1])
-    # DELTA mode: sharded predecessor + caller-described delta → never
+    # DELTA mode: predecessor + caller-described delta → never
     # materialize the predecessor's per-file maps (O(delta) publish).
     lazy = (
         prev_raw is not None
-        and _is_sharded(prev_raw)
         and new_files is not None
         and removed_files is not None
-        and (files is None or len(files) > _segment_target())
     )
     if files is None and not lazy:
         raise ValueError(
-            "_publish: files=None requires a sharded predecessor and an "
+            "_publish: files=None requires a predecessor and an "
             "explicit new_files/removed_files delta"
         )
     if prev_raw is not None:
@@ -536,20 +484,16 @@ def _publish(
             body["file_stats"] = fs
     # Sequence stamping: carried files keep their original commit seq, new
     # files get THIS version — the ordering equality deletes resolve
-    # against (delete seq > file seq ⇒ the delete applies). A carried file
-    # with no recorded seq (pre-sequence manifest) stamps as version-1:
-    # provably OLDER than this commit, so a same-commit equality delete
-    # still reaches it. Callers may pass an explicit ``file_seq`` override
-    # (restore_version re-pins the restored state's sequences — restamping
-    # restored files as new would detach them from carried eq deletes).
+    # against (delete seq > file seq ⇒ the delete applies). Callers may
+    # pass an explicit ``file_seq`` override (restore_version re-pins the
+    # restored state's sequences — restamping restored files as new would
+    # detach them from carried eq deletes).
     override = file_seq or {}
 
     def _seq(f: str) -> int:
         if f in override:
             return int(override[f])
-        if f in prev_file_seq:
-            return prev_file_seq[f]
-        return version - 1 if f in prev_files else version
+        return prev_file_seq.get(f, version)
 
     if not lazy:
         body["file_seq"] = {f: _seq(f) for f in files}
@@ -562,17 +506,17 @@ def _publish(
         body["constraints"] = dict(constraints)  # replace (set_constraints)
     elif prev_constraints:
         body["constraints"] = prev_constraints
-    # Sharded manifests (VERDICT r7 #1): past the inline threshold the
-    # per-file maps move out of the head into bounded, immutable segment
-    # files — commits re-reference untouched segments (O(changed files)
-    # manifest I/O per commit) and planning reads only the segments whose
-    # recorded ranges intersect the pushed predicate (SnapshotReader).
+    # Sharded manifests (VERDICT r7 #1): the per-file maps live in
+    # bounded, immutable segment files, never in the head — commits
+    # re-reference untouched segments (O(changed files) manifest I/O per
+    # commit) and planning reads only the segments whose recorded ranges
+    # intersect the pushed predicate (SnapshotReader).
     if lazy:
         body = _segmentize_delta(
             table, body, prev_raw, new_files, removed_files,
             override, file_partitions or {}, file_stats or {}, version,
         )
-    elif len(files) > _segment_target():
+    else:
         # the commit's DIRTY set: files removed by this commit plus files
         # whose per-file metadata an explicit override actually changes —
         # everything else is carried verbatim by construction, so
@@ -624,18 +568,18 @@ def _publish_raw(table: str, version: int, body: dict) -> None:
 #   constraints, txns, MOR sidecar lists) plus a ``segments`` list — one
 #   entry per segment file with its file count, byte/row totals, merged
 #   column bounds and partition-value sets (the manifest-level ranges);
-# - each segment (manifests/segs/seg-*.parquet — columnar, the default
-#   since round 12; legacy seg-*.json reads forever) carries ≤ target
-#   per-file entries ({seq, partition tuple, column stats}), grouped by
-#   partition tuple at write time so segment ranges stay tight;
+# - each segment (manifests/segs/seg-*.parquet, columnar: the vacuum
+#   fold reads its ``path`` column alone) carries ≤ target per-file
+#   entries ({seq, partition tuple, column stats}), grouped by partition
+#   tuple at write time so segment ranges stay tight;
 # - segments are IMMUTABLE and carried BY REFERENCE: a commit re-lists
 #   the untouched segments' paths verbatim and writes new segments only
 #   for new/changed files — a 1-file append touches O(1) segments;
 # - scan planning (SnapshotReader) checks the pushed predicate against
 #   each segment's recorded ranges and opens only the intersecting
 #   segments — manifest-level skipping, one layer above per-file skip;
-# - tables at or under the threshold keep the inline format (human-
-#   readable, zero extra files), and every reader accepts both.
+# - every commit writes this form, from the first one on: a head never
+#   lists files inline, and there is no other segment encoding.
 #
 # Orphaned segments (lost CAS races) and segments referenced only by
 # expired versions are GC'd by vacuum, same contract as data files.
@@ -645,12 +589,17 @@ _SEG_TARGET_DEFAULT = 100
 
 
 def _segment_target() -> int:
-    """Files per manifest segment (and the inline-format threshold).
-    ``SPARK_GRAFT_MANIFEST_SEGMENT_FILES`` tunes it; 0 disables sharding
-    (always inline)."""
+    """Files per manifest segment. ``SPARK_GRAFT_MANIFEST_SEGMENT_FILES``
+    tunes it; it must be a positive integer."""
     env = os.environ.get("SPARK_GRAFT_MANIFEST_SEGMENT_FILES")
-    n = int(env) if env else _SEG_TARGET_DEFAULT
-    return n if n > 0 else (1 << 62)
+    if not env:
+        return _SEG_TARGET_DEFAULT
+    if not (env.isdecimal() and int(env) > 0):
+        raise ValueError(
+            f"SPARK_GRAFT_MANIFEST_SEGMENT_FILES={env!r}: "
+            "use a positive integer"
+        )
+    return int(env)
 
 
 def _dec_stat(v):
@@ -733,7 +682,7 @@ def _summarize_segment(rel: str, entries: dict[str, dict]) -> dict:
         out["cols"] = cols
     # merged member column TYPES (first-seen order): when every member
     # recorded its types and they agree per column, the summary carries the
-    # segment's union schema — an UNMAPPED sharded table then resolves its
+    # segment's union schema — an UNMAPPED table then resolves its
     # union-of-schemas from the head alone (VERDICT r8 #2: the probe used
     # to hydrate O(files) on every plan of a never-mapped table). Any
     # disagreement (mixed physical types across members) drops the block;
@@ -915,6 +864,47 @@ def _pack_groups(
     return groups, tail
 
 
+def _commit_entries(table: str, seg: dict) -> dict:
+    """A predecessor segment's entries, read by a commit that re-homes its
+    members. Head-referenced segments are vacuum-protected; a missing one
+    means the manifest plane was mutated outside the format's contract —
+    refusing beats silently dropping its files."""
+    try:
+        return _read_segment(table, seg["path"])["entries"]
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"manifest segment {seg['path']} of {table} is missing "
+            "(externally deleted?) — cannot commit safely"
+        ) from None
+
+
+def _head_over(
+    table: str,
+    body: dict,
+    clean_groups: list[dict],
+    reused: list[dict],
+    ent_of: dict[str, dict],
+) -> dict:
+    """The head a commit publishes: ``body``'s table metadata (minus the
+    per-file maps) over the reused segments plus new segments written
+    for the ``ent_of`` entries, packed into groups."""
+    segs_out = [dict(seg) for seg in reused] + _write_segment_chunks(
+        table, ent_of, (body.get("sort_order") or {}).get("cols") or []
+    )
+    out = {
+        k: v
+        for k, v in body.items()
+        if k not in ("files", "file_seq", "file_partitions", "file_stats")
+    }
+    out["format"] = 2
+    out["groups"], out["segments"] = _pack_groups(
+        table, clean_groups, segs_out
+    )
+    if not out["groups"]:
+        del out["groups"]
+    return out
+
+
 def _segmentize(
     table: str,
     body: dict,
@@ -959,27 +949,9 @@ def _segmentize(
     # segment that fails verification below. Carried files NOT in a
     # dropped segment are, by the partition property of segments, inside
     # a reused one — no member lists needed for the sight-unseen path.
-    # An INLINE predecessor has no segments at all: every file is loose
-    # (the one-time transition commit materializes the full split).
-    if prev_raw is not None and _is_sharded(prev_raw):
-        loose = [f for f in files if f not in prev_files]
-    else:
-        loose = list(files)
-
-    def _entries(seg: dict) -> dict:
-        try:
-            return _read_segment(table, seg["path"])["entries"]
-        except FileNotFoundError:
-            # head-referenced segments are vacuum-protected; a missing one
-            # means the manifest plane was mutated outside the format's
-            # contract — refusing beats silently dropping its files
-            raise FileNotFoundError(
-                f"manifest segment {seg['path']} of {table} is missing "
-                "(externally deleted?) — cannot commit safely"
-            ) from None
-
+    loose = [f for f in files if f not in prev_files]
     for seg in to_read:
-        ent = _entries(seg)
+        ent = _commit_entries(table, seg)
         ok = all(
             p in fileset
             and int(e["seq"]) == int(fseq.get(p, -1))
@@ -995,7 +967,9 @@ def _segmentize(
         reused += tiny  # few enough — keep them as-is
     else:
         for seg in tiny:  # fold the tiny tail into full-size segments
-            loose.extend(p for p in _entries(seg) if p in fileset)
+            loose.extend(
+                p for p in _commit_entries(table, seg) if p in fileset
+            )
     ent_of: dict[str, dict] = {}
     for p in dict.fromkeys(loose):
         e: dict = {"seq": int(fseq[p])}
@@ -1004,21 +978,7 @@ def _segmentize(
         if p in fs:
             e["stats"] = fs[p]
         ent_of[p] = e
-    segs_out = [dict(seg) for seg in reused] + _write_segment_chunks(
-        table, ent_of, (body.get("sort_order") or {}).get("cols") or []
-    )
-    out = {
-        k: v
-        for k, v in body.items()
-        if k not in ("files", "file_seq", "file_partitions", "file_stats")
-    }
-    out["format"] = 2
-    out["groups"], out["segments"] = _pack_groups(
-        table, clean_groups, segs_out
-    )
-    if not out["groups"]:
-        del out["groups"]
-    return out
+    return _head_over(table, body, clean_groups, reused, ent_of)
 
 
 def _write_segment_chunks(
@@ -1109,15 +1069,6 @@ def _segmentize_delta(
         else:
             (tiny if seg["n"] * 4 < target else reused).append(seg)
 
-    def _entries(seg: dict) -> dict:
-        try:
-            return _read_segment(table, seg["path"])["entries"]
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"manifest segment {seg['path']} of {table} is missing "
-                "(externally deleted?) — cannot commit safely"
-            ) from None
-
     ent_of: dict[str, dict] = {}
     for p in new:
         e: dict = {"seq": int(override.get(p, version))}
@@ -1127,7 +1078,7 @@ def _segmentize_delta(
             e["stats"] = fs_arg[p]
         ent_of[p] = e
     for seg in to_read:
-        ent = _entries(seg)
+        ent = _commit_entries(table, seg)
         if all(p not in dirty for p in ent):
             (tiny if seg["n"] * 4 < target else reused).append(seg)
             continue
@@ -1146,24 +1097,10 @@ def _segmentize_delta(
         reused += tiny
     else:
         for seg in tiny:  # fold the tiny tail into full-size segments
-            for p, e in _entries(seg).items():
+            for p, e in _commit_entries(table, seg).items():
                 if p not in removed:
                     ent_of[p] = e
-    segs_out = [dict(seg) for seg in reused] + _write_segment_chunks(
-        table, ent_of, (body.get("sort_order") or {}).get("cols") or []
-    )
-    out = {
-        k: v
-        for k, v in body.items()
-        if k not in ("files", "file_seq", "file_partitions", "file_stats")
-    }
-    out["format"] = 2
-    out["groups"], out["segments"] = _pack_groups(
-        table, clean_groups, segs_out
-    )
-    if not out["groups"]:
-        del out["groups"]
-    return out
+    return _head_over(table, body, clean_groups, reused, ent_of)
 
 
 _STATS_MAX_STR = 96
@@ -1509,7 +1446,7 @@ def set_sort_order(spark: SparkSession, table: str, order: list[str]) -> int:
     cur = current_version(table)
     if cur is None:
         raise FileNotFoundError(f"no snapshots at {table}")
-    # head-first: a metadata-only commit on a MAPPED sharded table never
+    # head-first: a metadata-only commit on a MAPPED table never
     # touches the per-file maps (column check from the schema block,
     # publish as an empty delta); only an unmapped table's column check
     # needs the file union
@@ -1535,7 +1472,7 @@ def set_sort_order(spark: SparkSession, table: str, order: list[str]) -> int:
     else:
         block = None
     _publish(
-        table, cur + 1, m.get("files"), "set-sort-order",
+        table, cur + 1, None, "set-sort-order",
         delete_files=_manifest_deletes(m),
         eq_deletes=_manifest_eq_deletes(m),
         sort_order=block,
@@ -1609,8 +1546,8 @@ def commit_append(
     # immutable across renames, so a concurrent evolve between this write
     # and the CAS publish below cannot invalidate the written bytes.
     # HEAD-only read: everything an append needs (schema, spec, sort
-    # order, constraints) rides the head — on a sharded manifest the
-    # append path never materializes the per-file maps at all.
+    # order, constraints) rides the head — the append path never
+    # materializes the per-file maps at all.
     m_prev = _read_manifest_head(table, cur) if cur is not None else {}
     sch = m_prev.get("schema")
     if sch is not None:
@@ -1662,20 +1599,15 @@ def commit_append(
         # publishing on top of it (no-op when unchanged)
         _validate(prev_m.get("constraints", {}))
         version = (cur or 0) + 1
-        # sharded predecessor: publish the DELTA (files=None) — the full
-        # file list lives in the segments and is never materialized here;
-        # inline predecessor: the head IS the full manifest, list from it
-        files_arg = (
-            None
-            if _is_sharded(prev_m)
-            else prev_m.get("files", []) + new_files
-        )
         try:
             # appends never touch existing files → outstanding MOR delete
             # sidecars carry forward unchanged (the new files' HIGHER
             # sequence keeps them out of older equality deletes' scope)
+            # publish the DELTA (files=None) over a predecessor — the full
+            # file list lives in the segments and is never materialized
             _publish(
-                table, version, files_arg, "append", txn=txn,
+                table, version, None if prev_m else new_files, "append",
+                txn=txn,
                 delete_files=_manifest_deletes(prev_m),
                 eq_deletes=_manifest_eq_deletes(prev_m),
                 file_partitions=fparts,
@@ -1982,16 +1914,13 @@ def _logical(df: DataFrame, sch: dict | None, keep: tuple = ()) -> DataFrame:
 
 
 def history(table: str) -> list[dict]:
-    # head-only: sharded manifests answer n_files from the group and
-    # segment summaries (both carry exact member counts)
+    # head-only: n_files comes from the group and segment summaries (both
+    # carry exact member counts)
     out = []
     for v in _versions(table):
         m = _read_manifest_head(table, v)
-        n = (
-            sum(int(s["n"]) for s in m.get("groups", []))
-            + sum(int(s["n"]) for s in m.get("segments", []))
-            if _is_sharded(m)
-            else len(m["files"])
+        n = sum(
+            int(s["n"]) for s in m.get("groups", []) + m.get("segments", [])
         )
         out.append(
             {k: m[k] for k in ("version", "operation")} | {"n_files": n}
@@ -2039,15 +1968,12 @@ def _live_refs(
         m = _read_manifest_head(table, v)
         files.update(_manifest_deletes(m))
         files.update(e["path"] for e in _manifest_eq_deletes(m))
-        if _is_sharded(m):
-            for g in m.get("groups", []):
-                ap = os.path.abspath(_segment_abspath(table, g["path"]))
-                groups.setdefault(ap, g["path"])
-            for seg in m.get("segments", []):
-                ap = os.path.abspath(_segment_abspath(table, seg["path"]))
-                pending.setdefault(ap, seg["path"])
-        else:
-            files.update(m.get("files", []))
+        for g in m.get("groups", []):
+            ap = os.path.abspath(_segment_abspath(table, g["path"]))
+            groups.setdefault(ap, g["path"])
+        for seg in m.get("segments", []):
+            ap = os.path.abspath(_segment_abspath(table, seg["path"]))
+            pending.setdefault(ap, seg["path"])
     # each distinct GROUP read once — its member segments join the pool
     # (groups are shared across versions by the reuse design, exactly
     # like segments, so this stays O(heads + distinct groups + distinct
@@ -2133,9 +2059,9 @@ _VACUUM_FOLD_MIN_SEGS = 64
 def _vacuum_fold_procs() -> int:
     """Worker processes for the vacuum segment fold.
     ``SPARK_GRAFT_VACUUM_FOLD_PROCS`` overrides (≤1 = serial); default
-    min(16, cpu count) — JSON parse is pure CPU and holds the GIL, so
-    threads cannot help here (unlike the remote-latency thread fans in
-    ``_read_segments``)."""
+    min(16, cpu count) — building each segment's path list is CPU work
+    that holds the GIL, so threads cannot help here (unlike the
+    remote-latency thread fans in ``_read_segments``)."""
     env = os.environ.get("SPARK_GRAFT_VACUUM_FOLD_PROCS")
     if env is not None:
         try:
@@ -2341,7 +2267,7 @@ def vacuum(
     # cycles, but with an already-large driver heap each growth step was
     # triggering gen-2 rescans of the full object graph — at 10M files
     # that, plus per-path abspath overhead (see _abs_norm), dwarfed the
-    # JSON parse the process pool removes.
+    # segment parse the process pool removes.
     with _gc_paused():
         ref_vs, ref_files, ref_segs, stale_markers = _ref_protected(
             table, seen_groups, seen_segs
@@ -2613,10 +2539,10 @@ def delete_where_mor(spark: SparkSession, table: str, predicate) -> dict:
             "rows_deleted": 0, "delete_files": len(dvs),
         }
     version = cur + 1
-    # files unchanged (the delete is a sidecar) — the empty delta lets a
-    # sharded head republish without re-hydrating the per-file maps
+    # files unchanged (the delete is a sidecar) — the empty delta
+    # republishes the head without re-hydrating the per-file maps
     _publish(
-        table, version, files, "delete-mor", delete_files=dvs + new_dv,
+        table, version, None, "delete-mor", delete_files=dvs + new_dv,
         eq_deletes=_manifest_eq_deletes(m),
         new_files=[], removed_files=[],
     )
@@ -2664,27 +2590,24 @@ def _table_columns(spark: SparkSession, m: dict) -> list[str]:
 
 def _probe_file_with_rows(table: str, m: dict) -> str | None:
     """One data file that provably holds rows — for the MOR commit-time
-    path-roundtrip probe. On a sharded manifest the segment summaries
-    point straight at one (zero footer opens); otherwise walk footers."""
+    path-roundtrip probe. The segment summaries point straight at one
+    (zero footer opens); stats-less members fall back to a footer walk."""
     import pyarrow.parquet as pq
 
-    if _is_sharded(m):
-        # descend rows>0 summaries only: group → segment → file, opening
-        # one group and one segment in the common case
-        segs = list(m.get("segments", []))
-        for g in m.get("groups", []):
-            if int(g.get("rows", 0)) > 0:
-                segs.extend(_read_group(table, g["path"]))
-                break
-        for seg in segs:
-            if int(seg.get("rows", 0)) > 0:
-                for p, e in _read_segment(table, seg["path"])[
-                    "entries"
-                ].items():
-                    st = e.get("stats")
-                    if st and int(st.get("rows", 0)) > 0:
-                        return p
-        m = _hydrate_manifest(table, m)  # stats-less members — rare
+    # descend rows>0 summaries only: group → segment → file, opening one
+    # group and one segment in the common case
+    segs = list(m.get("segments", []))
+    for g in m.get("groups", []):
+        if int(g.get("rows", 0)) > 0:
+            segs.extend(_read_group(table, g["path"]))
+            break
+    for seg in segs:
+        if int(seg.get("rows", 0)) > 0:
+            for p, e in _read_segment(table, seg["path"])["entries"].items():
+                st = e.get("stats")
+                if st and int(st.get("rows", 0)) > 0:
+                    return p
+    m = _hydrate_manifest(table, m)  # stats-less members — rare
     return next(
         (
             f
@@ -2704,7 +2627,7 @@ def _check_key_types(
     casts and can silently match nothing — the same silent-no-op class the
     name check prevents (ADVICE r3). Raise loudly at commit time. Mapped
     tables resolve the head types from the schema block alone (no file
-    list needed — O(1) on sharded manifests)."""
+    list needed — O(1))."""
     sch = m.get("schema")
     if sch is not None:
         head = {f["phys"]: f["type"] for f in sch["fields"]}
@@ -2746,12 +2669,12 @@ def delete_keys_mor(
             return {"version": cur, "operation": "delete-keys", "replayed": True}
     # head first: a MAPPED table's delete-keys commit never needs the
     # per-file maps (key checks resolve from the schema block, the probe
-    # from segment summaries) — O(head) on sharded manifests. Unmapped
-    # tables still hydrate for the union-schema column check.
+    # from segment summaries) — O(head). Unmapped tables still hydrate
+    # for the union-schema column check.
     head = _read_manifest_head(table, cur)
     m = (
         head
-        if head.get("schema") is not None and _is_sharded(head)
+        if head.get("schema") is not None
         else _hydrate_manifest(table, head)
     )
     if m.get("schema") is not None:
@@ -2783,7 +2706,7 @@ def delete_keys_mor(
         {"path": p, "keys": key_cols, "seq": version} for p in sidecars
     ]
     _publish(
-        table, version, m.get("files"), "delete-keys", txn=txn,
+        table, version, None, "delete-keys", txn=txn,
         delete_files=_manifest_deletes(m), eq_deletes=entries,
         new_files=[], removed_files=[],
     )
@@ -2855,15 +2778,11 @@ def upsert_keys_mor(
     src = source.persist()
     try:
         n_src = _count_unique(src, keys, "upsert")
-        # the streaming hot path: a MAPPED sharded table never hydrates —
+        # the streaming hot path: a MAPPED table never hydrates —
         # schema/spec/sort checks are head-only, the roundtrip probe is
         # summary-guided, and the publish is a pure delta (O(|batch|)
         # metadata per trigger regardless of table size)
-        m = (
-            head
-            if sch is not None and _is_sharded(head)
-            else _hydrate_manifest(table, head)
-        )
+        m = head if sch is not None else _hydrate_manifest(table, head)
         # same column contract as merge_into (review r3 finding): the
         # source must carry the table's columns; extras are dropped —
         # mode="mor" and mode="cow" streams produce the same table schema.
@@ -2915,9 +2834,7 @@ def upsert_keys_mor(
             {"path": p, "keys": list(keys), "seq": version} for p in sidecars
         ]
         _publish(
-            table, version,
-            (m["files"] + data_files) if "files" in m else None,
-            "upsert-keys", txn=txn,
+            table, version, None, "upsert-keys", txn=txn,
             delete_files=_manifest_deletes(m), eq_deletes=entries,
             file_partitions=fparts,
             file_stats=data_stats,
@@ -3044,210 +2961,6 @@ def restore_version(spark: SparkSession, table: str, version: int) -> int:
         sort_order=target.get("sort_order"),
     )
     return new_version
-
-
-def upgrade_manifest(table: str) -> dict:
-    """Backfill the O(head) union-schema metadata onto a sharded table
-    created before the ``types`` summaries existed (VERDICT r9 #4): such
-    a table silently fell back to full manifest hydration on EVERY schema
-    resolve of an unmapped read, forever — the summaries are recomputed
-    only when a commit dirties their segment, which a read-mostly table
-    never does. One metadata commit fixes it in place:
-
-    - a segment summary without a merged ``types`` block is recomputed
-      from its (immutable) segment file's entries — ZERO data-file reads
-      when the entries already carry per-file types (any table written
-      since the entry-level stats era);
-    - a LEGACY segment whose entries predate per-file types is re-stamped
-      from each member's parquet FOOTER (schema-only) and rewritten as a
-      NEW immutable segment file — the original stays referenced by older
-      versions/forks and is GC'd by vacuum once unreferenced;
-    - groups whose summary already carries types ride by reference; a
-      group opened because it lacks one is re-listed VERBATIM when none
-      of its members change, so idempotent re-runs publish nothing.
-
-    Inline (non-sharded) manifests hydrate O(files-in-head) by
-    construction — no-op. Returns counters + the published version."""
-    cur = current_version(table)
-    if cur is None:
-        raise FileNotFoundError(f"no snapshots at {table}")
-    head = _read_manifest_head(table, cur)
-    res = {
-        "upgraded": False,
-        "segments_resummarized": 0,
-        "segments_rewritten": 0,
-        "footer_reads": 0,
-        "version": cur,
-    }
-    if not _is_sharded(head):
-        return res
-
-    def _upgrade_summary(s: dict) -> tuple[dict, bool]:
-        if s.get("types"):
-            return dict(s), False
-        rel = s["path"]
-        entries = {
-            p: dict(e) for p, e in _read_segment(table, rel)["entries"].items()
-        }
-        # a member with NO stats at all can never contribute types (the
-        # every-member-or-nothing rule) — don't burn footer reads on a
-        # segment that cannot gain a block
-        if any(not e.get("stats") for e in entries.values()):
-            return dict(s), False
-        stamped = False
-        for p, e in entries.items():
-            st = e["stats"]
-            if st.get("types"):
-                continue
-            t = _file_types(p)
-            res["footer_reads"] += 1
-            if t is None:
-                return dict(s), False  # unconvertible member — leave as-is
-            e["stats"] = dict(st) | {"types": t}
-            stamped = True
-        if stamped:
-            # entries changed → NEW immutable segment file; the original
-            # keeps serving older versions and zero-copy forks
-            new_rel = _write_segment_entries(table, entries)
-            res["segments_rewritten"] += 1
-            res["segments_resummarized"] += 1
-            return _summarize_segment(new_rel, entries), True
-        out = _summarize_segment(rel, entries)
-        if out.get("types"):
-            # count only when the re-summary actually gained a types
-            # block (ADVICE r10: a never-upgradeable segment re-counted
-            # on every re-run overstated the CLI verb's work)
-            res["segments_resummarized"] += 1
-            return out, True
-        return dict(s), False  # genuine member disagreement — unchanged
-
-    changed = False
-    clean_groups: list[dict] = []
-    pool: list[dict] = []
-    for g in head.get("groups", []):
-        if g.get("types"):
-            clean_groups.append(dict(g))
-            continue
-        ups = [_upgrade_summary(m) for m in _read_group(table, g["path"])]
-        if any(c for _s, c in ups):
-            changed = True
-            pool.extend(s for s, _c in ups)
-            continue
-        # members unchanged — but the GROUP entry itself may predate the
-        # group-level types block: re-summarize over the same group file
-        # (no member rewrite, no new file) and keep it if types appear
-        ng = _summarize_group(g["path"], [s for s, _c in ups])
-        if ng.get("types"):
-            changed = True
-            clean_groups.append(ng)
-        else:
-            clean_groups.append(dict(g))  # verbatim — idempotent re-run
-    for s in head.get("segments", []):
-        ns, c = _upgrade_summary(s)
-        changed = changed or c
-        pool.append(ns)
-    if not changed:
-        return res
-    groups, tail = _pack_groups(table, clean_groups, pool)
-    body = {
-        k: v
-        for k, v in head.items()
-        if k not in ("groups", "segments", "version", "operation",
-                     "committed_at")
-    }
-    body |= {
-        "version": cur + 1,
-        "operation": "upgrade_manifest",
-        "committed_at": time.time(),
-        "format": 2,
-        "segments": tail,
-    }
-    if groups:
-        body["groups"] = groups
-    _publish_raw(table, cur + 1, body)
-    res["upgraded"] = True
-    res["version"] = cur + 1
-    return res
-
-
-def convert_segment_format(table: str, to: str | None = None) -> dict:
-    """Rewrite every manifest segment not already in the target format
-    (default: the configured ``_segment_format``) as a NEW immutable
-    segment file in that format and publish ONE metadata commit over the
-    converted set — zero data-file reads or writes, entries carried
-    byte-exactly through the format hop (summaries keep every
-    entry-derived field and change only the member path). Existing
-    segment files keep serving older versions and zero-copy forks, and
-    vacuum GCs them once unreferenced — the same immutability story as
-    ``upgrade_manifest``'s rewrites. Groups whose members all already
-    match ride by reference; a group with any converted member has its
-    member list re-packed into new immutable group files. Converting a
-    CLONE rewrites the foreign segments it references into the clone's
-    OWN segdir (its data files stay zero-copy), unsharing the metadata
-    plane from the source. Idempotent: a fully-converted table publishes
-    nothing. Returns counters + the published version."""
-    to = to or _segment_format()
-    if to not in ("parquet", "json"):
-        raise ValueError(f"segment format {to!r}: use 'parquet' or 'json'")
-    cur = current_version(table)
-    if cur is None:
-        raise FileNotFoundError(f"no snapshots at {table}")
-    head = _read_manifest_head(table, cur)
-    res = {
-        "converted": False,
-        "segments_rewritten": 0,
-        "version": cur,
-        "format": to,
-    }
-    if not _is_sharded(head):
-        return res  # inline manifest — no segment files to convert
-    ext = "." + to
-
-    def _convert(s: dict) -> tuple[dict, bool]:
-        if s["path"].endswith(ext):
-            return dict(s), False
-        entries = _read_segment(table, s["path"])["entries"]
-        ns = dict(s)
-        ns["path"] = _write_segment_entries(table, entries, fmt=to)
-        res["segments_rewritten"] += 1
-        return ns, True
-
-    changed = False
-    clean_groups: list[dict] = []
-    pool: list[dict] = []
-    for g in head.get("groups", []):
-        members = [_convert(m) for m in _read_group(table, g["path"])]
-        if any(c for _m, c in members):
-            changed = True
-            pool.extend(m for m, _c in members)
-        else:
-            clean_groups.append(dict(g))  # verbatim — idempotent re-run
-    for s in head.get("segments", []):
-        ns, c = _convert(s)
-        changed = changed or c
-        pool.append(ns)
-    if not changed:
-        return res
-    groups, tail = _pack_groups(table, clean_groups, pool)
-    body = {
-        k: v
-        for k, v in head.items()
-        if k not in ("groups", "segments", "version", "operation",
-                     "committed_at")
-    }
-    body |= {
-        "version": cur + 1,
-        "operation": "convert_segment_format",
-        "committed_at": time.time(),
-        "format": 2,
-        "segments": tail,
-    }
-    if groups:
-        body["groups"] = groups
-    _publish_raw(table, cur + 1, body)
-    res["converted"] = True
-    res["version"] = cur + 1
-    return res
 
 
 def compact_deletes(spark: SparkSession, table: str) -> dict:
@@ -3761,11 +3474,9 @@ def table_statistics(table: str, version: int | None = None) -> dict:
     v = cur if version is None else version
     m = _read_manifest_head(table, v)
     summaries = m.get("groups", []) + m.get("segments", [])
-    if _is_sharded(m) and all(
-        s.get("stats_n") == s["n"] for s in summaries
-    ):
-        # sharded manifest, fully stats-bearing: the head's group and
-        # segment summaries answer it — O(head) regardless of file count
+    if all(s.get("stats_n") == s["n"] for s in summaries):
+        # fully stats-bearing: the head's group and segment summaries
+        # answer it — O(head) regardless of file count
         rows = sum(int(s["rows"]) for s in summaries)
         size = sum(int(s["bytes"]) for s in summaries)
         n_files = sum(int(s["n"]) for s in summaries)
@@ -3820,10 +3531,10 @@ def estimate_pruned_bytes(
     against ``pushed`` — a list of ``pyspark.sql.datasource`` filters —
     and sum the surviving files' manifest byte counts (footer size for
     stats-less legacy files). Pure planning metadata: no data file is
-    read, and on a sharded manifest only predicate-intersecting segments
-    are parsed. ``version`` pins the estimate to that snapshot's manifest
-    (default: head) — the time-travel contract ``broadcast_if_small``
-    relies on (ADVICE r7)."""
+    read, and only predicate-intersecting segments are parsed.
+    ``version`` pins the estimate to that snapshot's manifest (default:
+    head) — the time-travel contract ``broadcast_if_small`` relies on
+    (ADVICE r7)."""
     from web_analytics_on_aws_spark.sources.snapshot_datasource import (
         SnapshotReader,
         planned_files,
@@ -3907,10 +3618,10 @@ def set_constraints(spark: SparkSession, table: str, constraints: dict[str, str]
     version = cur + 1
     # one atomic metadata-only commit carrying the new constraint set
     # (and any outstanding MOR delete files — dropping them would
-    # resurrect deleted rows); empty delta → sharded heads republish
+    # resurrect deleted rows); the empty delta republishes the head
     # without materializing the per-file maps
     _publish(
-        table, version, head_m.get("files"), "set_constraints",
+        table, version, None, "set_constraints",
         constraints=constraints, delete_files=_manifest_deletes(head_m),
         eq_deletes=_manifest_eq_deletes(head_m),
         new_files=[], removed_files=[],
@@ -4002,41 +3713,33 @@ def metadata_table(spark: SparkSession, table: str, kind: str) -> DataFrame:
     if kind == "manifests":
         # Iceberg's "table$manifests" analog: one row per manifest
         # SEGMENT of the current head (the grouped layer expanded), with
-        # its storage format, member count/bytes and recorded path range
-        # — summaries only, zero segment opens (this branch runs BEFORE
-        # the full hydration below). Inline (format-1) heads report zero
-        # rows: their file maps live in the head itself.
+        # its member count/bytes and recorded path range — summaries
+        # only, zero segment opens (this branch runs BEFORE the full
+        # hydration below)
         rows = []
-        if _is_sharded(head_only := _read_manifest_head(table, vs[-1])):
-            for s in _effective_segments(table, head_only):
-                ap = _segment_abspath(table, s["path"])
-                rows.append(
-                    {
-                        "path": s["path"],
-                        "format": (
-                            "parquet"
-                            if s["path"].endswith(".parquet")
-                            else "json"
-                        ),
-                        "n_files": int(s["n"]),
-                        "size_bytes": (
-                            os.path.getsize(ap)
-                            if os.path.exists(ap)
-                            else None
-                        ),
-                        "record_count": (
-                            int(s["rows"])
-                            if s.get("rows") is not None
-                            and int(s.get("stats_n", 0)) == int(s["n"])
-                            else None
-                        ),
-                        "lo_path": s.get("lo"),
-                        "hi_path": s.get("hi"),
-                    }
-                )
+        head_only = _read_manifest_head(table, vs[-1])
+        for s in _effective_segments(table, head_only):
+            ap = _segment_abspath(table, s["path"])
+            rows.append(
+                {
+                    "path": s["path"],
+                    "n_files": int(s["n"]),
+                    "size_bytes": (
+                        os.path.getsize(ap) if os.path.exists(ap) else None
+                    ),
+                    "record_count": (
+                        int(s["rows"])
+                        if s.get("rows") is not None
+                        and int(s.get("stats_n", 0)) == int(s["n"])
+                        else None
+                    ),
+                    "lo_path": s.get("lo"),
+                    "hi_path": s.get("hi"),
+                }
+            )
         return spark.createDataFrame(
             rows,
-            "path string, format string, n_files long, size_bytes long, "
+            "path string, n_files long, size_bytes long, "
             "record_count long, lo_path string, hi_path string",
         )
 
